@@ -7,7 +7,7 @@ holding the *maximum* confidence via conditional updates (:85-97), plus
 Person/Bicycle/Motorcycle instance counts (:63-83, 101-114).
 
 Spark shape: the whole Lambda+DynamoDB dance is
-``explode(labels) -> groupBy(ts, camera) -> pivot(label).max(conf) + counts``
+``explode(labels) -> groupBy(ts, camera).agg(max(conf) per label, counts)``
 — one shuffle, idempotent under duplicate delivery (max is commutative/
 idempotent, which is exactly why the reference's conditional update was safe
 under SQS at-least-once, ST2).
@@ -38,7 +38,7 @@ def stub_detector(seed_col: Column, conf_col: Column) -> Column:
     Emits 1-2 labels derived from a seed column: label id = seed % 5 mapped
     onto a fixed vocabulary, confidence from ``conf_col``, instance count
     from seed % 3. Mirrors what a real detector UDF returns so the
-    downstream pivot/count plan is identical in tests and production.
+    downstream aggregation plan is identical in tests and production.
     """
     name = F.element_at(
         F.array(F.lit("Person"), F.lit("Car"), F.lit("Bicycle"), F.lit("Truck"), F.lit("Motorcycle")),
@@ -69,9 +69,9 @@ def explode_labels(
     (all-NULL maxes, zero counts) — the reference wrote a DynamoDB item
     per PROCESSED image, detections or not, and "frames with ped_count
     = 0" must include them. Plain explode silently dropped such frames
-    (r7 review; the always-nonempty stub hid it). The explicit-values
-    pivot in detections_wide ignores the NULL label, so downstream
-    schemas are unchanged.
+    (r7 review; the always-nonempty stub hid it). detections_wide's
+    per-label maxes ignore the NULL label, so downstream schemas are
+    unchanged.
     """
     return df.select(*key_cols, F.explode_outer(labels_col).alias("l")).select(
         *key_cols,
@@ -88,23 +88,23 @@ def detections_wide(
 ) -> DataFrame:
     """Wide detections table: max confidence per label + VRU counts (A1/A2/K6).
 
-    ``label_values`` must be the bounded label vocabulary — passing it
-    explicitly keeps the pivot single-pass (no distinct-discovery scan),
-    mirroring the reference's bounded DynamoDB attribute space.
+    ``label_values`` must be the bounded label vocabulary (the reference's
+    bounded DynamoDB attribute space). One ``groupBy(keys).agg`` computes
+    every column — one conditional max per vocabulary value, then the two
+    counts — so the input, a detector UDF included, is evaluated once and
+    shuffled once. Groups with a NULL key are kept, as a SQL ``GROUP BY``
+    keeps them.
     """
-    maxes = (
-        long_df.groupBy(*key_cols)
-        .pivot("label", label_values)
-        .agg(F.round(F.max("confidence"), 3))
+    label = F.col("label")
+    maxes = [
+        F.round(F.max(F.when(label == v, F.col("confidence"))), 3).alias(v)
+        for v in label_values
+    ]
+
+    def count(labels: tuple[str, ...], alias: str) -> Column:
+        n = F.sum(F.when(label.isin(*labels), F.col("n_instances")))
+        return F.coalesce(n, F.lit(0)).cast("bigint").alias(alias)
+
+    return long_df.groupBy(*key_cols).agg(
+        *maxes, count(PED_LABELS, "ped_count"), count(WHEELER_LABELS, "wheeler_count")
     )
-    is_ped = F.col("label").isin(*PED_LABELS)
-    is_wheeler = F.col("label").isin(*WHEELER_LABELS)
-    counts = long_df.groupBy(*key_cols).agg(
-        F.coalesce(F.sum(F.when(is_ped, F.col("n_instances"))), F.lit(0))
-        .cast("bigint")
-        .alias("ped_count"),
-        F.coalesce(F.sum(F.when(is_wheeler, F.col("n_instances"))), F.lit(0))
-        .cast("bigint")
-        .alias("wheeler_count"),
-    )
-    return maxes.join(counts, list(key_cols))

@@ -427,11 +427,8 @@ def q69_bag_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.rosbag_split import read_bags_split
 
     cam = "/camera_front/image_raw"
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prior = spark.conf.get(conf_key, "false")
     work = tempfile.mkdtemp(prefix="bag_dsv2_")
     try:
-        spark.conf.set(conf_key, "true")
         path = os.path.join(work, "indexed.bag")
         with open(path, "wb") as f:
             f.write(build_indexed_bag(n_frames=16, n_chunks=4))
@@ -470,7 +467,6 @@ def q69_bag_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return materialize(out)
     finally:
-        spark.conf.set(conf_key, prior)
         shutil.rmtree(work, ignore_errors=True)
 
 
@@ -591,11 +587,8 @@ def q95_bag_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.rosbag_fixtures import build_indexed_bag
 
     register_rosbag_source(spark)
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prior = spark.conf.get(conf_key, "false")
     work = tempfile.mkdtemp(prefix="bag_stream_")
     try:
-        spark.conf.set(conf_key, "true")  # reader declares pushFilters
         src = f"{work}/in"
         os.makedirs(src)
 
@@ -654,7 +647,6 @@ def q95_bag_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return materialize(out)
     finally:
-        spark.conf.set(conf_key, prior)
         shutil.rmtree(work, ignore_errors=True)
 
 

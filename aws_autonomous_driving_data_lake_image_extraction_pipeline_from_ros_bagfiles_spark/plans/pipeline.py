@@ -251,14 +251,13 @@ def q59_find_images_with_cars(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q35_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.upsert import max_upsert_stream, read_upsert_state
-    from ..tables import table_path
+    from ..tables import raw_schema, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = table_path(sf_dir, "events")
-    schema = spark.read.parquet(src).schema  # raw reader type for ts
-    # (ts is timestamp[us] in the driver data; nanosAsLong stays set so a
+    # raw reader type for ts (raw_schema sets nanosAsLong, so a
     # nanos-written variant of the table degrades to bigint, which
     # normalize_event_ts also handles)
+    schema = raw_schema(spark, sf_dir, "events")
     work = tempfile.mkdtemp(prefix="stream_upsert_")
     try:
         # the streaming file source wants a directory (it is the landing

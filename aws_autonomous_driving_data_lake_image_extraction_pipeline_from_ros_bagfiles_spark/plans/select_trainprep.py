@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.paths import extension_rewrite
 from ..operators.detections import explode_labels, stub_detector
-from ..tables import load, normalize_event_ts, table_path
+from ..tables import load, normalize_event_ts, raw_schema, table_path
 from .registry import materialize, register
 
 # Stub-detector long form as SQL (shared with q34's oracle).
@@ -247,13 +247,12 @@ def q40_extension_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q41_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = table_path(sf_dir, "events")
-    schema = spark.read.parquet(src).schema  # raw reader type for ts
+    schema = raw_schema(spark, sf_dir, "events")  # raw reader type for ts
     work = tempfile.mkdtemp(prefix="stream_window_")
     try:
         os.makedirs(f"{work}/in")
-        os.symlink(src, f"{work}/in/events.parquet")
+        os.symlink(os.path.abspath(src), f"{work}/in/events.parquet")
         stream = spark.readStream.schema(schema).parquet(f"{work}/in")
 
         def batch_fn(batch_df: DataFrame, batch_id: int) -> None:

@@ -13,9 +13,10 @@ Split planning (one :class:`InputPartition` per surviving chunk) reuses
 ``plan_bag_splits`` — a pruned read is visible externally as fewer RDD
 partitions, which is what q69 and tests/test_bag_datasource.py assert.
 
-Requires ``spark.sql.python.filterPushdown.enabled=true`` (off by default
-in Spark 4.1) for pushFilters to be consulted; without it the source still
-works, just with Spark applying all filters post-scan.
+A reader that declares pushFilters fails every batch read with
+``DATA_SOURCE_PUSHDOWN_DISABLED`` unless
+``spark.sql.python.filterPushdown.enabled`` is true (off by default in
+Spark 4.1), so :func:`register_rosbag_source` turns it on for the session.
 
 Exactness contract for consumed filters: ``plan_bag_splits`` restricts the
 connection map shipped to each split to the selected topics, and
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -51,12 +53,15 @@ class BagDataSourceReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         raw = options.get("path") or options.get("paths")
         if not raw:
-            raise ValueError("rosbag source requires a 'path' option (file, glob, or comma list)")
+            raise ValueError("rosbag source requires a 'path' option (file, dir, glob, or comma list)")
         paths: list[str] = []
         for pat in raw.split(","):
-            matches = sorted(glob.glob(pat.strip()))
+            pat = pat.strip()
+            if os.path.isdir(pat):
+                pat = os.path.join(pat, "*.bag")  # a landing dir, as the stream reads it
+            matches = sorted(glob.glob(pat))
             if not matches:
-                raise FileNotFoundError(f"rosbag source: no files match {pat.strip()!r}")
+                raise FileNotFoundError(f"rosbag source: no files match {pat!r}")
             paths.extend(matches)
         self._paths = paths
         topics = options.get("topics")
@@ -190,5 +195,7 @@ class RosbagDataSource(DataSource):
 
 
 def register_rosbag_source(spark) -> None:
-    """Idempotently register ``format("rosbag")`` on this session."""
+    """Idempotently register ``format("rosbag")`` on this session and
+    enable the Python filter pushdown its batch reader requires."""
     spark.dataSource.register(RosbagDataSource)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

@@ -6,9 +6,30 @@ time, event_type = topic, props = payload; reference bagstream.py:219-238),
 ``documents``/``embeddings`` back the beyond-reference dedup / similarity /
 text operators.
 
-All loads are plain ``spark.read.parquet`` so Catalyst keeps predicate
-pushdown, column pruning and partition pruning — do not ``.cache()`` here;
-at 100 TB the tables do not fit and caching defeats scan pruning.
+All loads are plain parquet reads so Catalyst keeps predicate pushdown,
+column pruning and partition pruning — do not ``.cache()`` here; at 100 TB
+the tables do not fit and caching defeats scan pruning.
+
+Schema memo. ``spark.read.parquet(path)`` without a schema runs one Spark
+job to infer it, and on a short query that job is a large share of the
+wall time. :func:`raw_schema` infers each table file's schema once and
+memoizes it; every later load is ``spark.read.schema(memo).parquet(path)``,
+which runs no job. The memo key covers everything the inference depends
+on:
+
+- the applicationId, so a restarted context never reads another
+  application's entry (a miss evicts every other application's entries,
+  the same per-application rule ``_BUCKETED`` keys on);
+- the resolved path (``realpath``: a retargeted symlink is a new key);
+- the file's size and ``mtime_ns``, so a rewritten file is re-inferred;
+- the ``spark.sql.legacy.parquet.nanosAsLong`` value in force, which
+  changes the type a TIMESTAMP(NANOS) column reads as.
+
+The memo holds a schema, not a DataFrame. Every load still builds a fresh
+relation with fresh attribute ids, so plans, pushdown and pruning are the
+same as an inferring read, and a builder that loads one table twice or
+joins it to itself needs no aliasing. A shared DataFrame handle measured
+no faster than the schema memo, and it would need that aliasing.
 """
 
 from __future__ import annotations
@@ -17,6 +38,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -47,6 +69,13 @@ def table_path(sf_dir: str, name: str) -> str:
 # the pipeline writes (bagstream.py:251-252) IS a co-location scheme; Spark
 # bucketing is the principled version.
 _BUCKETED: dict[tuple[str, str, str], str] = {}
+
+# Inferred parquet schemas: (applicationId, realpath, size, mtime_ns,
+# nanosAsLong) -> StructType. See the module docstring.
+_SCHEMAS: dict[tuple[str, str, int, int, str], StructType] = {}
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 
 # The fact tables worth bucketing and their join keys.
 DEFAULT_BUCKET_SPECS = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
@@ -156,18 +185,26 @@ def _read_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a table from its parquet source with per-table normalization —
     shared by load() and materialize_bucketed() so a bucketed layout can
     never persist a different schema than the plain path serves."""
+    path, schema = _memo_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet reader's schema for a table file, before any
+    normalization (``events`` keeps its raw ``ts`` type). Inferred by a
+    Spark job on the first call for a file version in this application,
+    then served from the memo."""
+    return _memo_schema(spark, sf_dir, name)[1]
+
+
+def _memo_schema(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, StructType]:
+    """(resolved path, memoized raw schema) of one table file."""
     if name == "events":
         # events.parquet's `ts` physical type has varied across testdata
         # generations (TIMESTAMP(NANOS) stored as int64 vs plain micros
-        # TIMESTAMP without UTC adjustment). Normalize every generation to
-        # TimestampType (micros, UTC session) so downstream plans and
-        # oracles see one type:
-        #   - nanos-as-bigint: integer `DIV 1000` stays in the bigint
-        #     domain (a double roundtrip would lose precision at 1e18) and
-        #     matches DuckDB's nanos->micros truncation;
-        #   - TIMESTAMP_NTZ (micros, no tz): cast — value-preserving under
-        #     the UTC session timezone, and DuckDB's TIMESTAMP is NTZ with
-        #     the same wall-clock values.
+        # TIMESTAMP without UTC adjustment); normalize_event_ts maps every
+        # generation to TimestampType.
         #
         # DELIBERATE session-wide conf change (there is no per-read option
         # for this legacy flag, and restoring it after load() would break
@@ -175,14 +212,31 @@ def _read_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # session will also surface as bigint. Scoped alternatives don't
         # exist until Spark grows a reader option; documented here and in
         # the verify skill.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(table_path(sf_dir, name)))
-    return spark.read.parquet(table_path(sf_dir, name))
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    path = os.path.realpath(table_path(sf_dir, name))
+    st = os.stat(path)
+    app = spark.sparkContext.applicationId
+    key = (app, path, st.st_size, st.st_mtime_ns, spark.conf.get(_NANOS_AS_LONG, "false"))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        for stale in [k for k in _SCHEMAS if k[0] != app]:
+            del _SCHEMAS[stale]
+        _SCHEMAS[key] = schema
+    return path, schema
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Coerce an events frame's ``ts`` to TimestampType whatever the
-    physical source type was (see load() for the per-generation rationale).
+    physical source type was:
+
+    - nanos-as-bigint: integer ``DIV 1000`` stays in the bigint domain (a
+      double roundtrip would lose precision at 1e18) and matches DuckDB's
+      nanos->micros truncation;
+    - TIMESTAMP_NTZ (micros, no tz): cast — value-preserving under the UTC
+      session timezone, and DuckDB's TIMESTAMP is NTZ with the same
+      wall-clock values.
+
     Streaming readers that scan events.parquet directly need this too —
     their micro-batch frames carry the raw reader type."""
     ts_type = dict(df.dtypes).get("ts", "")

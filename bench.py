@@ -35,6 +35,10 @@ warm median. Cross-protocol diffs compare cold_total vs repeat-1 totals
 and median-vs-median; never median-vs-repeat-1. ``loadavg_start/_end``
 stamp the host's 1/5/15-min load so a committed snapshot carries its own
 noise-window evidence.
+
+``build_jobs`` maps each query to the number of Spark jobs each sample's
+builder call ran before its action (counted through a job group per
+call); the suite total is printed on stderr.
 """
 
 from __future__ import annotations
@@ -185,12 +189,21 @@ def main() -> None:
     firsts: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
+    # per query, one count per sample; read outside the timed region
+    build_jobs: dict[str, list[int]] = {}
+    sc = spark.sparkContext
     for name, fn in sorted(queries.items()):
         runs = []
+        groups: list[str] = []
         try:
-            for _ in range(max(1, args.repeat)):
+            for i in range(max(1, args.repeat)):
+                groups.append(f"bench-build-{name}-{i}")
+                sc.setJobGroup(groups[-1], name)
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
+                try:
+                    df = fn(spark, sf_dir)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
                 n = df.count()
                 runs.append(round(time.perf_counter() - t0, 3))
             if args.repeat > 1 and monotone_noisy(runs):
@@ -221,6 +234,12 @@ def main() -> None:
             errors[name] = repr(e)[:200]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
+        finally:
+            # per query, not at the end: the tracker keeps only the last
+            # spark.ui.retainedJobs jobs, fewer than the suite runs
+            build_jobs[name] = [
+                len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups
+            ]
         samples[name] = runs
         firsts[name] = runs[0]
         times[name] = round(statistics.median(runs), 3)
@@ -291,6 +310,12 @@ def main() -> None:
                 file=sys.stderr,
             )
 
+    print(
+        f"# build jobs: {sum(map(sum, build_jobs.values()))} in"
+        f" {sum(map(len, build_jobs.values()))} builder calls"
+        f" ({sum(v[0] for v in build_jobs.values() if v)} in first samples)",
+        file=sys.stderr,
+    )
     loadavg_end = [round(x, 2) for x in os.getloadavg()]
     detail = {
         "metric": "total_query_sec",
@@ -304,6 +329,7 @@ def main() -> None:
         "repeat": max(1, args.repeat),
         "loadavg_start": loadavg_start,
         "loadavg_end": loadavg_end,
+        "build_jobs": build_jobs,
         "annotations": {
             q: note for q, note in QUERY_ANNOTATIONS.items() if q in times
         },

@@ -24,13 +24,34 @@ def bag_path(spark, tmp_path_factory):
     with open(path, "wb") as f:
         f.write(build_indexed_bag(n_frames=16, n_chunks=4))
     register_rosbag_source(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    yield path
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    return path
 
 
 def _read(spark, path):
     return spark.read.format("rosbag").option("path", path).load()
+
+
+def test_batch_read_on_session_without_pushdown_conf(spark, tmp_path):
+    """register_rosbag_source enables the conf a pushFilters reader needs;
+    without it every batch read fails with DATA_SOURCE_PUSHDOWN_DISABLED."""
+    path = tmp_path / "a.bag"
+    path.write_bytes(build_indexed_bag(n_frames=4, n_chunks=2))
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    register_rosbag_source(spark)
+    assert _read(spark, str(path)).filter(F.col("topic") == CAM).count() == 2  # half the frames
+
+
+def test_batch_read_of_a_directory(spark, tmp_path):
+    """A directory path reads the *.bag files in it, as the stream reader
+    does, instead of raising IsADirectoryError."""
+    for name in ("a.bag", "b.bag"):
+        (tmp_path / name).write_bytes(build_indexed_bag(n_frames=4, n_chunks=2))
+    (tmp_path / "notes.txt").write_text("not a bag")
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    register_rosbag_source(spark)
+    one = _read(spark, str(tmp_path / "a.bag")).count()
+    assert one > 0
+    assert _read(spark, str(tmp_path)).count() == 2 * one
 
 
 def test_full_read_matches_split_reader(spark, bag_path):

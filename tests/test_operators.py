@@ -777,3 +777,29 @@ def test_stage_sliced_parquet_matches_per_slice_filters(spark, tmp_path):
             for r in docs.filter(F.col("doc_id") % 3 == i).collect()
         }
         assert got == want and got
+
+
+def test_detections_wide_one_aggregation_keeps_null_keys(spark):
+    """One groupBy computes every column (one Exchange), with the pivot's
+    column names and order, and keeps a NULL-key group as the oracle's
+    GROUP BY does."""
+    long_df = spark.createDataFrame(
+        [
+            ("t1", "front", "Person", 0.91234, 2),
+            ("t1", "front", "Car", 0.5, 1),
+            ("t1", "front", "Person", 0.7, 1),
+            ("t2", None, "Bicycle", 0.4, 3),
+            ("t3", "rear", None, None, None),  # a frame with no detections
+        ],
+        "ts_key string, camera string, label string, confidence double, n_instances int",
+    )
+    wide = detections_wide(long_df, ["Person", "Car", "Bicycle"])
+    # read before execution: an executed adaptive plan prints twice
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert wide.columns == ["ts_key", "camera", "Person", "Car", "Bicycle", "ped_count", "wheeler_count"]
+    assert {tuple(r) for r in wide.collect()} == {
+        ("t1", "front", 0.912, 0.5, None, 3, 0),
+        ("t2", None, None, None, 0.4, 0, 3),
+        ("t3", "rear", None, None, None, 0, 0),
+    }
