@@ -44,30 +44,28 @@ def _filter_scanlines(arr: np.ndarray, bpp: int) -> bytes:
     filters for every row at once (vectorized), pick per-row the one with
     the minimal sum of absolute signed byte values (the libpng heuristic)."""
     h, stride = arr.shape
-    prev = np.vstack([np.zeros((1, stride), np.uint8), arr[:-1]])
-    left = np.zeros_like(arr)
+    prev = np.zeros_like(arr)  # b: the row above
+    prev[1:] = arr[:-1]
+    left = np.zeros_like(arr)  # a
     left[:, bpp:] = arr[:, :-bpp]
-    upleft = np.zeros_like(arr)
+    upleft = np.zeros_like(arr)  # c
     upleft[:, bpp:] = prev[:, :-bpp]
 
-    a16, b16, c16 = left.astype(np.int16), prev.astype(np.int16), upleft.astype(np.int16)
-    # Paeth predictor
-    p = a16 + b16 - c16
-    pa, pb, pc = np.abs(p - a16), np.abs(p - b16), np.abs(p - c16)
+    # (5, h, stride); uint8 wraparound = mod-256 per the spec
+    cands = np.empty((5, h, stride), np.uint8)
+    cands[0] = arr
+    np.subtract(arr, left, out=cands[1])
+    np.subtract(arr, prev, out=cands[2])
+    np.subtract(arr, ((left.astype(np.uint16) + prev) >> 1).astype(np.uint8), out=cands[3])
+    # Paeth: with p = a + b - c, |p-a| = |b-c|, |p-b| = |a-c|, |p-c| = |a+b-2c|
+    bc = prev.astype(np.int16) - upleft
+    ac = left.astype(np.int16) - upleft
+    pa, pb, pc = np.abs(bc), np.abs(ac), np.abs(bc + ac)
     paeth = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, upleft))
-
-    cands = np.stack(
-        [
-            arr,
-            arr - left,
-            arr - prev,
-            (arr.astype(np.int16) - ((a16 + b16) >> 1)).astype(np.uint8),
-            arr - paeth,
-        ]
-    )  # (5, h, stride), uint8 wraparound = mod-256 per the spec
-    # minimal sum of |signed byte| per row
-    signed = np.where(cands > 127, 256 - cands.astype(np.int16), cands.astype(np.int16))
-    best = signed.sum(axis=2, dtype=np.int64).argmin(axis=0)  # (h,)
+    np.subtract(arr, paeth, out=cands[4])
+    # minimal sum of |signed byte| per row; |signed(c)| = min(c, 256 - c)
+    cost = np.minimum(cands, 0 - cands)
+    best = cost.sum(axis=2, dtype=np.int64).argmin(axis=0)  # (h,)
 
     rows = np.empty((h, stride + 1), np.uint8)
     rows[:, 0] = best

@@ -10,6 +10,13 @@ Defaults chosen for a large cluster reading ~100 TB, but harmless on
 - Arrow enabled: every Python-side operator in this engine uses
   pandas/Arrow batches (mapInPandas / pandas_udf), never row-at-a-time UDFs.
 - 128 MiB file split target keeps scan tasks right-sized for wide parquet.
+- Python workers fork from this package's ``worker_daemon``: Spark's own
+  daemon re-reads ``pyspark.zip``'s directory in every task (140-320 ms
+  before any user code); the engine's daemon re-reads it only when the
+  archive changed. Workers must therefore be able to import this package
+  (run from the repository root, or put it on ``PYTHONPATH``), which every
+  engine UDF needs anyway: cloudpickle pickles module functions by
+  reference.
 """
 
 from __future__ import annotations
@@ -77,6 +84,8 @@ def get_spark(app_name: str = "ros-baglake-spark", *, shuffle_partitions: int | 
         # applied when this call launches the JVM; a crash leaves the
         # dir for the OS /tmp policy instead of the repo tree.
         .config("spark.sql.warehouse.dir", _process_warehouse_dir())
+        # Python workers fork from worker_daemon.py (see the docstring above).
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     if not os.environ.get("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", "local[*]"))

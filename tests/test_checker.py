@@ -1,10 +1,6 @@
 """The correctness gate's comparator must actually discriminate — a
 vacuously-passing harness would green-light everything."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tools.check_correctness import canon_cell, frame_digest
 
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.functions.png import (
+    _filter_scanlines,
     decode_png,
     encode_png,
 )
@@ -134,3 +135,54 @@ def test_write_png_files_sink(spark, tmp_path):
         pix, w, h, ch = decode_png(open(f, "rb").read())
         assert (w, h, ch) == (10, 8, 3)
         assert pix == src[seq]
+
+
+def _reference_filter_scanlines(arr, bpp):
+    """The int16 formulation the vectorized heuristic replaced; kept here
+    as the byte-for-byte reference for the encoder's filter choice."""
+    h, stride = arr.shape
+    prev = np.vstack([np.zeros((1, stride), np.uint8), arr[:-1]])
+    left = np.zeros_like(arr)
+    left[:, bpp:] = arr[:, :-bpp]
+    upleft = np.zeros_like(arr)
+    upleft[:, bpp:] = prev[:, :-bpp]
+    a16, b16, c16 = left.astype(np.int16), prev.astype(np.int16), upleft.astype(np.int16)
+    p = a16 + b16 - c16
+    pa, pb, pc = np.abs(p - a16), np.abs(p - b16), np.abs(p - c16)
+    paeth = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, upleft))
+    cands = np.stack(
+        [
+            arr,
+            arr - left,
+            arr - prev,
+            (arr.astype(np.int16) - ((a16 + b16) >> 1)).astype(np.uint8),
+            arr - paeth,
+        ]
+    )
+    signed = np.where(cands > 127, 256 - cands.astype(np.int16), cands.astype(np.int16))
+    best = signed.sum(axis=2, dtype=np.int64).argmin(axis=0)
+    rows = np.empty((h, stride + 1), np.uint8)
+    rows[:, 0] = best
+    rows[:, 1:] = cands[best, np.arange(h)]
+    return rows.tobytes()
+
+
+@pytest.mark.parametrize("w,h,bpp", [(1, 1, 1), (7, 5, 1), (33, 17, 3), (641, 9, 3), (31, 12, 4), (640, 480, 3)])
+def test_filter_scanlines_matches_reference_bytes(w, h, bpp):
+    rng = np.random.default_rng(w * 31 + h * 7 + bpp)
+    x = np.arange(w * bpp).reshape(1, -1)
+    y = np.arange(h).reshape(-1, 1)
+    images = {
+        "noise": rng.integers(0, 256, (h, w * bpp), dtype=np.uint8),
+        "gradient": (16 + (x // bpp + 2 * y) % 224).astype(np.uint8),
+        "gradient+noise": (
+            16 + (x // bpp + 2 * y) % 224 + rng.integers(-8, 9, (h, w * bpp))
+        ).astype(np.uint8),
+        "extremes": rng.choice(np.array([0, 1, 127, 128, 129, 255], np.uint8), (h, w * bpp)),
+    }
+    for name, arr in images.items():
+        got = _filter_scanlines(arr, bpp)
+        assert got == _reference_filter_scanlines(arr, bpp), name
+        if h * w <= 1024:  # decode_png's Paeth/Average rows are pixel loops
+            pix, ww, hh, cc = decode_png(encode_png(arr.tobytes(), w, h, bpp))
+            assert (pix, ww, hh, cc) == (arr.tobytes(), w, h, bpp), name

@@ -19,3 +19,7 @@ def test_scale_critical_configs(spark):
     assert s.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     # UTC session tz — oracle comparisons require a fixed zone.
     assert s.conf.get("spark.sql.session.timeZone") == "UTC"
+    # Python workers fork from the engine's daemon (worker_daemon.py).
+    assert s.sparkContext.getConf().get("spark.python.daemon.module") == (
+        "aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.worker_daemon"
+    )
