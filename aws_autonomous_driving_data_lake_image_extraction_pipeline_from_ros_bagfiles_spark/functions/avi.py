@@ -14,11 +14,10 @@ uncompressed RIFF AVI writer over the engine's real RGB frame buffers:
 - :func:`decode_avi` — AVI bytes -> (frames, fps); walks the RIFF tree,
   so it round-trips our own output and any other uncompressed-DIB AVI.
 
-mp4/libx264 remains the documented env-blocked stub
-(sources/sinks.py:render_videos) — compression is the only missing
-piece; the distributed render path (group frames per directory, sort by
-frame index, one container per group) is exercised for real through this
-codec.
+mp4/libx264 waits for a download of ffmpeg — compression is the only
+missing piece; the distributed render path (group frames per directory,
+sort by frame index, one container per group) is exercised for real
+through this codec.
 """
 
 from __future__ import annotations

@@ -17,11 +17,14 @@ real trained quantizer, per ROADMAP item 3:
 MLlib is used for the trainer only; search is plain DataFrame ops — the
 trained model reduces to a centroid table usable by any engine.
 
-Two centroid-distance paths, switched on B (``_CODEGEN_MAX_B``): small
-B inlines centroids as codegen literals (JVM-only, zero Python); large B
-broadcasts one (B, d) numpy matrix and computes the argmin / probe order
-as a BLAS matmul inside an Arrow-batched Pandas UDF, keeping plan size
-O(1) in B (VERDICT r1 item 7 — literal trees blow up codegen at B≳1k).
+Serving (assignment and probe ranking) runs no Python at any B and
+switches on B (``_CODEGEN_MAX_B``): small B inlines centroids as codegen
+literals; large B joins a broadcast (bucket, centroid) table and takes a
+min-struct / sorted-collect aggregate, keeping plan size O(1) in B
+(VERDICT r1 item 7 — literal trees blow up codegen at B≳1k). Both fold
+the same sequential double distance, so they agree bucket for bucket.
+Lloyd training (:func:`lloyd_assign`) assigns with one BLAS matmul per
+Arrow batch against a broadcast (B, d) numpy matrix.
 """
 
 from __future__ import annotations
@@ -98,8 +101,8 @@ def train_quantizer(
 
 # Above this many centroids the codegen literal path stops being the right
 # tool: each centroid inlines as a literal expression tree, so plan size and
-# codegen time grow O(B·d). The vectorized path broadcasts one (B, d) numpy
-# matrix and does the argmin as a BLAS matmul per Arrow batch instead.
+# codegen time grow O(B·d). Past it, serving joins a broadcast centroid
+# TABLE instead (:func:`_table_argmin` / :func:`probe_buckets_table`).
 _CODEGEN_MAX_B = 32
 
 
@@ -133,13 +136,6 @@ def _nearest_centroid(vec_col: str, centroids: list[list[float]]):
     return _expr_cached(("nc", vec_col, _cent_key(centroids)), build)
 
 
-def _centroid_broadcast(df: DataFrame, centroids: list[list[float]]):
-    """Ship the (B, d) centroid matrix to executors once as a Spark
-    broadcast variable (the broadcast-table form of VERDICT item 7 — one
-    copy per executor, not one literal tree per expression)."""
-    return df.sparkSession.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-
-
 def _sq_dists(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
     """(n, d) x (B, d) -> (n, B) squared L2, one BLAS matmul."""
     return (
@@ -149,60 +145,41 @@ def _sq_dists(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
     )
 
 
-def _nearest_centroid_vectorized(df: DataFrame, vec_col: str, centroids: list[list[float]]):
-    from pyspark.sql.functions import pandas_udf
-
-    bc = _centroid_broadcast(df, centroids)
-
-    @pandas_udf("int")
-    def nearest(vecs: pd.Series) -> pd.Series:
-        cents = bc.value
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        return pd.Series(_sq_dists(mat, cents).argmin(axis=1).astype(np.int32))
-
-    return nearest(F.col(vec_col))
-
-
 def assign_buckets(
     corpus: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    declarative: bool = False,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Nearest-centroid bucket per vector. B <= 32 stays pure codegen
-    (JVM-only, no Python workers); beyond that the broadcast-matrix
-    Pandas-UDF path keeps plan size O(1) in B.
+    """Nearest-centroid bucket per vector, with no Python at any B.
+    B <= 32 is the literal-argmin projection (a pure map — measured
+    faster than any join/agg shape at small B: sf1.0 q55 18.1 s table vs
+    10.4 s literal); past the cap it is :func:`_table_argmin` against a
+    broadcast centroid TABLE (VERDICT r10 #5): O(1) plan size, O(N)
+    shuffle, same distance fold and tie-break.
 
-    ``declarative=True`` (SPARK_GRAFT_TIER=production in the registry
-    plans, VERDICT r10 #5) guarantees NO Python at any B: below the
-    codegen cap that is the literal-argmin projection this function
-    already uses (a pure map — measured faster than any join/agg shape
-    at small B: sf1.0 q55 18.1 s table vs 10.4 s literal), and past the
-    cap — where the default tier falls back to a pandas UDF — it routes
-    through :func:`assign_buckets_table`: broadcast centroid TABLE +
-    min-struct aggregate, O(1) plan size, same argmin/tie-break.
-
-    PRECONDITION of the declarative > cap path (ADVICE r11): ``id_col``
-    values must be UNIQUE and NON-NULL. The table tier's
-    ``groupBy(id_col)`` would collapse duplicate ids to one row and the
-    join-back drops NULL-id rows, whereas the withColumn tiers preserve
-    input multiplicity. Every engine caller satisfies this (vec_id is a
-    key in all IVF corpora); pass the actual key via ``id_col`` if it
-    is not named vec_id."""
+    PRECONDITION past the cap (ADVICE r11): ``id_col`` values must be
+    UNIQUE and NON-NULL. The table path's ``groupBy(id_col)`` would
+    collapse duplicate ids to one row and the join-back drops NULL-id
+    rows, whereas the literal projection preserves input multiplicity.
+    Every engine caller satisfies this (vec_id is a key in all IVF
+    corpora); pass the actual key via ``id_col`` if it is not named
+    vec_id."""
     if len(centroids) <= _CODEGEN_MAX_B:
         return corpus.withColumn("bucket", _nearest_centroid(vec_col, centroids))
-    if declarative:
-        # keep the withColumn-like contract (input columns + bucket):
-        # joining the (id-less) assignment back needs the id_col key
-        assigned = assign_buckets_table(corpus, centroids, vec_col, id_col)
-        extra = [c for c in corpus.columns if c not in (id_col, vec_col)]
-        if extra:
-            return corpus.join(
-                assigned.select(id_col, "bucket"), id_col
-            )
-        return assigned
-    return corpus.withColumn("bucket", _nearest_centroid_vectorized(corpus, vec_col, centroids))
+    # keep the withColumn-like contract (input columns + bucket):
+    # joining the (id-less) assignment back needs the id_col key
+    assigned = _table_argmin(
+        corpus,
+        _centroid_frame(corpus.sparkSession, centroids),
+        _sq_dist_col(F.col(vec_col), F.col("centroid")),
+        vec_col,
+        id_col,
+    )
+    extra = [c for c in corpus.columns if c not in (id_col, vec_col)]
+    if extra:
+        return corpus.join(assigned.select(id_col, "bucket"), id_col)
+    return assigned
 
 
 def ivf_topk_batch(
@@ -215,24 +192,22 @@ def ivf_topk_batch(
     id_col: str = "vec_id",
     qid_col: str = "qid",
     qvec_col: str = "qvec",
-    declarative: bool = False,
 ) -> DataFrame:
     """Batched KNN: top-k corpus neighbors for EVERY query row.
 
     The production shape — one shuffle-join instead of a driver loop:
-    each query computes its nprobe nearest centroids in codegen (sorted
-    (distance, bucket) struct array, sliced), explodes to (query, bucket)
-    probe rows, equi-joins the bucketed corpus on bucket, and takes
-    per-query top-k with a rank window (WindowGroupLimit keeps a bounded
-    heap per query). Probe-bucket fan-out bounds join input to
+    each query ranks its nprobe nearest centroids, explodes to (query,
+    bucket) probe rows, equi-joins the bucketed corpus on bucket, and
+    takes per-query top-k with a rank window (WindowGroupLimit keeps a
+    bounded heap per query). Probe-bucket fan-out bounds join input to
     ~nprobe/B of |queries| x |corpus|.
 
-    ``declarative=True`` guarantees NO Python at any B: below the
-    codegen cap the probe ranking is already the JVM-only sorted
-    literal-struct slice; past the cap — where the default tier uses a
-    pandas UDF — it routes via :func:`probe_buckets_table` (broadcast
-    centroid table + sorted collect_list, no O(B·d) literal tree). The
-    downstream probe-join/top-k is shared by all tiers.
+    The probe ranking runs no Python at any B: below the codegen cap it
+    is a sorted (distance, bucket) literal-struct array, sliced; past
+    the cap it is :func:`probe_buckets_table` (broadcast centroid table
+    + sorted collect_list, no O(B·d) literal tree), which needs unique
+    ``qid_col`` values. Both rank by the same distance fold and
+    tie-break (lower bucket id).
 
     HARD LIMIT (ADVICE r12): the probe side (|queries| x nprobe rows of
     (qid, qvec, bucket)) is BROADCAST by :func:`_probe_topk` — the corpus
@@ -244,45 +219,29 @@ def ivf_topk_batch(
     callers are collect-bounded (serving batches, k rows out per query),
     so no runtime count-guard is spent on the hot path.
     """
-    if declarative and len(centroids) > _CODEGEN_MAX_B:
+    if len(centroids) > _CODEGEN_MAX_B:
         probes = probe_buckets_table(
             queries, centroids, nprobe, qvec_col, qid_col
         ).select(qid_col, qvec_col, F.explode("probe_buckets").alias("bucket"))
         return _probe_topk(
             bucketed, probes, k, vec_col, id_col, qid_col, qvec_col
         )
-    if len(centroids) <= _CODEGEN_MAX_B:
 
-        def build_probe():
-            dists = [
-                F.struct(
-                    _sq_dist_expr(qvec_col, c).alias("d"), F.lit(b).alias("bucket")
-                )
-                for b, c in enumerate(centroids)
-            ]
-            return F.transform(
-                F.slice(F.array_sort(F.array(*dists)), 1, nprobe),
-                lambda s: s["bucket"],
+    def build_probe():
+        dists = [
+            F.struct(
+                _sq_dist_expr(qvec_col, c).alias("d"), F.lit(b).alias("bucket")
             )
-
-        probe_buckets = _expr_cached(
-            ("probe", qvec_col, nprobe, _cent_key(centroids)), build_probe
+            for b, c in enumerate(centroids)
+        ]
+        return F.transform(
+            F.slice(F.array_sort(F.array(*dists)), 1, nprobe),
+            lambda s: s["bucket"],
         )
-    else:
-        from pyspark.sql.functions import pandas_udf
 
-        bc = _centroid_broadcast(queries, centroids)
-
-        @pandas_udf("array<int>")
-        def probe_udf(qvecs: pd.Series) -> pd.Series:
-            cents = bc.value
-            mat = np.stack(qvecs.to_numpy()).astype(np.float64)
-            # stable sort matches the codegen tie-break (equal distance ->
-            # lower bucket id first, as struct comparison falls through)
-            order = np.argsort(_sq_dists(mat, cents), axis=1, kind="stable")
-            return pd.Series(list(order[:, :nprobe].astype(np.int32)))
-
-        probe_buckets = probe_udf(F.col(qvec_col))
+    probe_buckets = _expr_cached(
+        ("probe", qvec_col, nprobe, _cent_key(centroids)), build_probe
+    )
     probes = queries.select(
         qid_col, qvec_col, F.explode(probe_buckets).alias("bucket")
     )
@@ -299,7 +258,7 @@ def _probe_topk(
     qvec_col: str,
 ) -> DataFrame:
     """Shared probe-join + per-query top-k tail of all
-    :func:`ivf_topk_batch` tiers: equi-join (qid, qvec, bucket) probe
+    :func:`ivf_topk_batch` paths: equi-join (qid, qvec, bucket) probe
     rows with the bucketed corpus, rank by cosine with a
     WindowGroupLimit-bounded heap per query.
 
@@ -330,14 +289,16 @@ def _probe_topk(
 
 # --- Deterministic (oracle-replayable) Lloyd training ---------------------
 #
-# MLlib KMeans is the production trainer, but its centroids are float-
-# order-dependent, so plans built on it can only be rows-only checked
-# (q55/q70/q103's declared design). The functions below are the EXACT
-# twin: plain Lloyd iterations whose every cross-engine-divergent float
-# step is quantized to integer fixed-point (memory rule: int math where
-# engines must agree bit-for-bit) —
+# MLlib KMeans is the trainer of q70/q103, but its centroids are float-
+# order-dependent, so plans built on it can only be rows-only checked.
+# The functions below are the replayable twin: plain Lloyd iterations
+# whose cross-engine-divergent float steps are quantized to integer
+# fixed-point (memory rule: int math where engines must agree
+# bit-for-bit) —
 #   * distances: sum of per-element floor((x-y)^2 * 1e12) — 64-bit exact,
-#     so the argmin (tie -> lower bucket id) is identical in any engine;
+#     so the argmin (tie -> lower bucket id) is identical in any engine
+#     (the flat trainer assigns by float64 matmul instead, which agrees
+#     except on pairs closer than the quantization step);
 #   * means: per-component sum of floor(x * 1e9), divided back in ONE
 #     deterministic double op chain — order-independent integer sums.
 # Init is corpus-derived and seedless: the B vectors with the smallest
@@ -369,13 +330,12 @@ def int_sq_dist(vec_col, cent_col):
 
 
 def _sq_dist_col(vec_col, cent_col):
-    """Plain-double squared L2 between two ARRAY COLUMNS — the
-    declarative serving distance. Identical sequential fold (and hence
+    """Plain-double squared L2 between two ARRAY COLUMNS — the serving
+    distance past the codegen cap. Identical sequential fold (and hence
     bit-identical result) to :func:`_sq_dist_expr`'s literal path: cast
-    to double, subtract, square, left-to-right aggregate. Used by the
-    production tier's table-broadcast assignment/probe, where the
-    centroids arrive as a broadcast FRAME instead of a literal tree, so
-    plan size stays O(1) in B and no Python worker ever runs."""
+    to double, subtract, square, left-to-right aggregate. The centroids
+    arrive as a broadcast FRAME instead of a literal tree, so plan size
+    stays O(1) in B and no Python worker ever runs."""
     diff = F.zip_with(
         vec_col, cent_col, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
     )
@@ -384,9 +344,9 @@ def _sq_dist_col(vec_col, cent_col):
 
 def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
     """(bucket, centroid) single-slice local frame from a centroid list
-    — the broadcast side of the declarative tier. Memoized per
-    (session, centroid values): a DataFrame IS session-bound, so the key
-    carries the application id; the B-row local relation itself is plan
+    — the broadcast side of the table path. Memoized per (session,
+    centroid values): a DataFrame IS session-bound, so the key carries
+    the application id; the B-row local relation itself is plan
     metadata (the values came in as an argument), so reuse saves only
     the createDataFrame/parallelize driver round trips, never a compute
     pass."""
@@ -402,33 +362,23 @@ def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
     return _expr_cached(key, build)
 
 
-def assign_buckets_table(
-    corpus: DataFrame,
-    cents,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+def _table_argmin(
+    corpus: DataFrame, cents: DataFrame, dist, vec_col: str, id_col: str
 ) -> DataFrame:
-    """Declarative nearest-centroid assignment against a (bucket,
-    centroid) TABLE — the production serving tier (VERDICT r10 #5, the
-    q105 declarative-tier pattern applied to IVF):
-
-    - NO Python anywhere (vs the B > 32 broadcast-matmul pandas UDF);
-    - plan size O(1) in B (vs the literal-codegen tree's O(B·d));
-    - shuffle volume O(N): the B-way crossJoin fan-out is consumed by a
-      map-side-combinable ``min(struct(dist, bucket, vec))`` partial
-      aggregate inside the same stage, so only one best-edge row per
-      vector reaches the exchange (the window form shuffled N·B rows).
-
-    Tie-break matches every other tier: equal distance -> lower bucket
-    id (struct comparison falls through to the bucket field).
-    ``cents`` may be a (bucket, centroid) frame or a centroid list."""
-    if not isinstance(cents, DataFrame):
-        cents = _centroid_frame(corpus.sparkSession, cents)
-    d = _sq_dist_col(F.col(vec_col), F.col("centroid"))
+    """Argmin bucket per vector against a (bucket, centroid) frame under
+    ``dist(vec, centroid)``: every vector meets every centroid through a
+    broadcast crossJoin (the B-row side; a streamed in-memory loop per
+    task), and a map-side-combinable ``min(struct(dist, bucket, vec))``
+    aggregate collapses the B-way fan-out to one row per vector BEFORE
+    the exchange, so the shuffle carries N rows (r11: the previous
+    window-rank form shuffled all N·B rows to sort them). Ties -> lower
+    bucket id (struct comparison falls through to the bucket field; the
+    vec field is never reached — (dist, bucket) pairs are unique per
+    vector). Returns (id, vec, bucket)."""
     best = (
         corpus.select(id_col, vec_col)
         .crossJoin(F.broadcast(cents))
-        .select(id_col, vec_col, "bucket", d.alias("__d"))
+        .select(id_col, vec_col, "bucket", dist.alias("__d"))
         .groupBy(id_col)
         .agg(F.min(F.struct("__d", "bucket", vec_col)).alias("__b"))
     )
@@ -446,13 +396,13 @@ def probe_buckets_table(
     qvec_col: str = "qvec",
     qid_col: str = "qid",
 ) -> DataFrame:
-    """Declarative per-query probe ranking against a (bucket, centroid)
-    TABLE: the ``nprobe`` nearest buckets per query row as one
+    """Per-query probe ranking against a (bucket, centroid) TABLE: the
+    ``nprobe`` nearest buckets per query row as one
     ``array_sort(collect_list(struct(d, bucket)))`` aggregate — no
     Python, no window, plan size O(1) in B. Each query keeps its vector
     (all replicas carry the same value, so ``first`` is
     value-deterministic). Ties -> lower bucket id, matching the codegen
-    and numpy tiers. Returns (qid, qvec, probe_buckets array)."""
+    probe. Returns (qid, qvec, probe_buckets array)."""
     spark = queries.sparkSession
     if not isinstance(cents, DataFrame):
         cents = _centroid_frame(spark, cents)
@@ -525,41 +475,20 @@ def assign_buckets_exact(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Argmin bucket per vector against a (bucket, centroid) frame under
-    :func:`int_sq_dist`; ties break to the lower bucket id. One broadcast
-    + one shuffle on ``id_col``. B grows with the corpus here (SemDeDup's
-    B ∝ N), so assignment work is O(N·B·d) — the cost exact Lloyd always
-    pays; swap in :func:`assign_buckets`'s BLAS path when bit-parity with
-    an external replay is not required.
-
-    r11 shape: the argmin is a map-side-combinable
-    ``min(struct(dist, bucket, vec))`` aggregate — the B-way crossJoin
-    fan-out collapses to one row per vector BEFORE the exchange, so the
-    shuffle carries N rows (the previous window-rank form shuffled all
-    N·B fan-out rows to sort them). Identical argmin and tie-break
-    (struct comparison: dist, then bucket; the vec field is never
-    reached — (dist, bucket) pairs are unique per vector)."""
+    :func:`int_sq_dist` (:func:`_table_argmin`'s shape); ties break to
+    the lower bucket id. B grows with the corpus here (SemDeDup's
+    B ∝ N), so assignment work is O(N·B·d) codegen; :func:`lloyd_assign`
+    is the BLAS path for when bit-parity with an external replay is not
+    required."""
     d = int_sq_dist(F.col(vec_col), F.col("centroid"))
-    best = (
-        # every vector compares against every centroid — the O(N·B) cross
-        # product exact Lloyd is; broadcasting the B-row centroid side
-        # makes the physical plan a streamed in-memory loop per task
-        emb.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents))
-        .select(id_col, vec_col, "bucket", d.alias("__d"))
-        .groupBy(id_col)
-        .agg(F.min(F.struct("__d", "bucket", vec_col)).alias("__b"))
-    )
-    return best.select(
-        id_col,
-        F.col(f"__b.{vec_col}").alias(vec_col),
-        F.col("__b.bucket").alias("bucket"),
-    )
+    return _table_argmin(emb, cents, d, vec_col, id_col)
 
 
 def centroid_list(cents: DataFrame) -> list[list[float]]:
     """(bucket, centroid) frame -> list ordered by bucket id, the form
-    :func:`assign_buckets`'s broadcast-matmul tier consumes (list index ==
-    bucket id — deterministic_lloyd's buckets are contiguous 0..B-1)."""
+    :func:`assign_buckets` and :func:`lloyd_assign` consume (list index
+    == bucket id — deterministic_lloyd's buckets are contiguous
+    0..B-1)."""
     return [list(r.centroid) for r in cents.orderBy("bucket").collect()]
 
 
@@ -568,27 +497,23 @@ def lloyd_assign(
     cents: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact: bool = True,
 ) -> DataFrame:
-    """Tier switch for nearest-centroid assignment against a (bucket,
-    centroid) frame (VERDICT r8 #1).
+    """Nearest-centroid assignment against a (bucket, centroid) frame for
+    Lloyd training (VERDICT r8 #1): collect the B centroids, ship them
+    once as a (B, d) numpy broadcast, and take the argmin per Arrow
+    batch as one BLAS matmul — O(1) plan size, matmul throughput.
+    Returns (id, vec, bucket).
 
-    ``exact=True`` — :func:`assign_buckets_exact`: integer-quantized
-    distances, bit-replayable by an external engine, O(N·B·d) codegen.
-    The oracle/gate tier.
-
-    ``exact=False`` — the production tier: collect the B centroids and
-    route through the broadcast-matmul path (one (B, d) numpy broadcast,
-    BLAS argmin per Arrow batch — O(1) plan size, matmul throughput).
-    Same tie-break (lower bucket id: np.argmin takes the first minimum);
-    float64 vs 1e-12-quantized distances can only disagree on pairs
-    closer than the quantization step — tests/test_ann_ivf.py pins tier
-    agreement on the test corpora. The B-row collect is the standard IVF
-    coarse-quantizer assumption (the centroid table fits the driver;
-    corpora beyond that use the hierarchical tier —
-    :func:`deterministic_lloyd_grouped` / :func:`assign_subbuckets_exact`
-    — whose per-cell equi-join never materializes the global centroid
-    set anywhere).
+    Ties go to the lower bucket id (np.argmin takes the first minimum),
+    as in :func:`assign_buckets_exact`; float64 vs 1e-12-quantized
+    distances can only disagree on pairs closer than the quantization
+    step — tests/test_ann_ivf.py pins bucket-for-bucket agreement on the
+    test corpus, and the hash gate replays the quantized argmin. The
+    B-row collect is the standard IVF coarse-quantizer assumption (the
+    centroid table fits the driver; corpora beyond that use the
+    hierarchical tier — :func:`deterministic_lloyd_grouped` /
+    :func:`assign_subbuckets_exact` — whose per-cell equi-join never
+    materializes the global centroid set anywhere).
 
     Unlike :func:`assign_buckets` (which keeps B <= _CODEGEN_MAX_B in
     codegen because a SERVING plan compiles once and is reused), this
@@ -597,12 +522,19 @@ def lloyd_assign(
     dominates at B ~ 30 (measured r9: q184 at sf0.1 spent ~4 s/pass
     compiling 31x64-literal argmins; the Arrow argmin runs the same pass
     in well under a second)."""
-    if exact:
-        return assign_buckets_exact(emb, cents, vec_col, id_col)
+    from pyspark.sql.functions import pandas_udf
+
     base = emb.select(id_col, vec_col)
-    return base.withColumn(
-        "bucket", _nearest_centroid_vectorized(base, vec_col, centroid_list(cents))
+    bc = base.sparkSession.sparkContext.broadcast(
+        np.asarray(centroid_list(cents), dtype=np.float64)
     )
+
+    @pandas_udf("int")
+    def nearest(vecs: pd.Series) -> pd.Series:
+        mat = np.stack(vecs.to_numpy()).astype(np.float64)
+        return pd.Series(_sq_dists(mat, bc.value).argmin(axis=1).astype(np.int32))
+
+    return base.withColumn("bucket", nearest(F.col(vec_col)))
 
 
 def probe_buckets_exact(
@@ -631,25 +563,19 @@ def deterministic_lloyd(
     iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact: bool = True,
 ) -> DataFrame:
     """Seedless, engine-portable k-means: md5-smallest init, ``iters``
-    exact Lloyd rounds (integer-quantized distances and means). Returns
-    the (bucket, centroid array<double>) frame. An empty bucket keeps its
-    previous centroid (LEFT-join fold), so the bucket count is stable.
-
-    ``exact=False`` keeps the SAME seedless init and integer-quantized
-    means but runs each round's assignment on :func:`lloyd_assign`'s
-    broadcast-matmul tier — the production path when bit-replay by an
-    external engine is not required (VERDICT r8 #1); if the two tiers'
-    argmins agree (pinned on testdata), the trained centroids are
+    Lloyd rounds with integer-quantized means, each round assigned by
+    :func:`lloyd_assign`'s broadcast matmul. Returns the (bucket,
+    centroid array<double>) frame. An empty bucket keeps its previous
+    centroid (LEFT-join fold), so the bucket count is stable. An oracle
+    replays training with :func:`int_sq_dist` argmins; where those agree
+    with the matmul argmins (pinned on testdata), the centroids are
     bit-identical."""
     from pyspark.sql import Window
 
-    # one column-pruned aggregate guarding int_sq_dist's bigint domain —
-    # out-of-range corpora must fail loudly, not diverge (ADVICE r8);
-    # checked on BOTH tiers so tier choice never changes the domain
-    # contract
+    # one column-pruned aggregate guarding the quantized bigint domain —
+    # out-of-range corpora must fail loudly, not diverge (ADVICE r8)
     _assert_quant_domain(emb, vec_col)
     seed = (
         emb.select(
@@ -667,7 +593,7 @@ def deterministic_lloyd(
         "bucket", F.row_number().over(Window.orderBy("__k", id_col)) - 1
     ).select("bucket", F.col(vec_col).alias("centroid"))
     for _ in range(iters):
-        assigned = lloyd_assign(emb, cents, vec_col, id_col, exact=exact)
+        assigned = lloyd_assign(emb, cents, vec_col, id_col)
         comp = (
             assigned.select(
                 "bucket",
@@ -707,8 +633,8 @@ def deterministic_lloyd(
         # per-round materialization (the iterative-operator checkpoint
         # discipline of operators/components.py): round k's fold joins
         # the round k-1 FRAME, so without the barrier every later
-        # consumer (and the exact=False tier's per-round centroid
-        # collect) re-executes all prior rounds' full-corpus aggregates;
+        # consumer (and lloyd_assign's per-round centroid collect)
+        # re-executes all prior rounds' full-corpus aggregates;
         # the frame is B rows. Values are unchanged — the oracle replays
         # the same arithmetic — and the plan audit still sees the round
         # plans (materialize is a no-op under the audit flag).
@@ -728,8 +654,9 @@ def assign_subbuckets_exact(
 ) -> DataFrame:
     """Per-cell argmin assignment against a (cell, sub, centroid) frame
     under :func:`int_sq_dist`; ties -> lower sub id. The join is an
-    EQUI-join on the cell key — unlike the flat exact tier's
-    crossJoin(broadcast(B rows)), no centroid set is ever broadcast
+    EQUI-join on the cell key — unlike the flat
+    :func:`assign_buckets_exact`'s crossJoin(broadcast(B rows)), no
+    centroid set is ever broadcast
     whole, so the plan survives B far beyond executor memory: each
     vector meets only its own cell's ~B/B1 sub-centroids.
 
@@ -1033,15 +960,8 @@ def _assigned_sq_dist(
     beyond B = 32, to obtain a value the bucket column already
     determines). ``frame`` must carry ``bucket``.
 
-    Equality with the true min-over-all-centroids distance assumes the
-    ASSIGNING tier's argmin agrees with this fold's arithmetic (ADVICE
-    r11): the default B > 32 tier assigns via a numpy BLAS argmin whose
-    float accumulation order differs from ``_sq_dist_col``'s sequential
-    fold, so an exact near-tie between two centroids could assign the
-    "other" one and make the stored sq_dist marginally exceed the true
-    nearest distance. Tier agreement is pinned on the test corpora
-    (tests/test_ann_ivf.py); the only consumer is the 4.0x drift-ratio
-    gate, where a near-tie-sized delta is immaterial by construction."""
+    :func:`assign_buckets` argmins this same sequential fold at every
+    B (ADVICE r11), so the stored value IS the minimum distance."""
     cf = _centroid_frame(frame.sparkSession, centroids)
     return (
         frame.join(F.broadcast(cf), "bucket")
@@ -1304,7 +1224,6 @@ def append_vectors(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_drift_ratio: float = 4.0,
-    declarative: bool = False,
 ) -> dict:
     """Incremental index maintenance as ONE cached plan per increment
     (VERDICT r7 #2 — the q65 treatment): assign the delta with the
@@ -1341,7 +1260,7 @@ def append_vectors(
     if has_sq is None:
         has_sq = "sq_dist" in spark.read.parquet(f"{path}/corpus").columns
     assigned = _assigned_sq_dist(
-        assign_buckets(delta, cents, vec_col, declarative=declarative),
+        assign_buckets(delta, cents, vec_col, id_col),
         cents,
         vec_col,
         out_col="__sq",
@@ -1407,11 +1326,10 @@ def ivf_topk(
 ) -> DataFrame:
     """Top-k by cosine scanning only the nprobe nearest buckets."""
     q = np.asarray(query_vec, dtype=np.float64).reshape(1, -1)
-    # same expanded-form distance and STABLE tie order as the batch
-    # path's probe_udf — the default introsort could probe a different
-    # bucket set on exactly-equal centroid distances (duplicate
-    # centroids from k > distinct points), breaking batch/single
-    # equivalence (r7 review)
+    # STABLE tie order, as the batch path's (distance, bucket) sort —
+    # the default introsort could probe a different bucket set on
+    # exactly-equal centroid distances (duplicate centroids from
+    # k > distinct points), breaking batch/single equivalence (r7 review)
     cents = np.asarray(centroids, dtype=np.float64)
     order = np.argsort(_sq_dists(q, cents)[0], kind="stable")
     probe = [int(b) for b in order[:nprobe]]

@@ -17,10 +17,10 @@ decode here is REAL, not a stub:
 - :func:`resample_nearest` — nearest-neighbor resample to a target rate
   (the audio analog of images.resize_shorter_edge)
 
-Lossy codecs (mp3/aac/opus) need external libraries; their decode slot
-is :func:`decode_compressed_stub` — an explicit NotImplementedError with
-the Spark-side plumbing (schema, batch shape) identical to
-:func:`decode_audio`, so wiring a codec later changes one function body.
+Lossy codecs (mp3/aac/opus) need a codec library that must be
+downloaded; once installed, a decoder slots in with
+:func:`decode_audio`'s contract (same schema, same mapInPandas batch
+shape).
 """
 
 from __future__ import annotations
@@ -165,12 +165,3 @@ def resample_nearest(decoded: DataFrame, target_rate: int) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return decoded.mapInPandas(run, schema=DECODED_AUDIO_SCHEMA)
-
-
-def decode_compressed_stub(*_args, **_kwargs):
-    """mp3/aac/opus decode requires a codec library not in this container.
-    When one is available, implement with the exact contract of
-    :func:`decode_audio` (same schema, same mapInPandas batch shape)."""
-    raise NotImplementedError(
-        "compressed-audio decode needs an external codec; see decode_audio for the contract"
-    )

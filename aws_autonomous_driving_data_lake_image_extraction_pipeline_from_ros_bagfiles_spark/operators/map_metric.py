@@ -15,7 +15,9 @@ driver-side accumulator:
    group is one image's boxes for one class — bounded, embarrassingly
    parallel, no global state. At 100 TB the shuffle key (image, class)
    is high-cardinality and unskewed (images have tens of boxes, not
-   millions).
+   millions). :func:`voc_match_declarative` is the same rule as a pure
+   DataFrame plan with no Python (what q105 runs); the greedy walk is
+   its reference in tests/test_map_metric.py.
 2. :func:`voc07_average_precision` — per-class AP with the VOC2007
    11-point interpolation: rank matched detections per class by
    (confidence DESC, det_id ASC), cumulative TP gives precision/recall
@@ -135,8 +137,8 @@ def voc_match_declarative(
     cell_size: float = 512.0,
 ) -> DataFrame:
     """The VOC matching rule as a PURE DataFrame plan — no Python
-    cogroup, no per-group IoU matrix (the production tier; the cogroup
-    :func:`voc_greedy_match` remains the replay/gate tier).
+    cogroup, no per-group IoU matrix (the cogroup
+    :func:`voc_greedy_match` is its reference in tests).
 
     The greedy claim walk reduces exactly to three declarative steps:
 
@@ -148,10 +150,10 @@ def voc_match_declarative(
        argmax IoU is below threshold never claims anything, so
        sub-threshold pairs cannot change any outcome).
     2. best edge per detection: max(struct(iou, -gt_id)) — each det's
-       argmax-IoU ground truth (tie -> smallest gt id; the cogroup tier
+       argmax-IoU ground truth (tie -> smallest gt id; the cogroup walk
        inherits numpy's first-row tie order instead, so on data with
-       EXACT IoU ties between distinct GTs the tiers may differ — both
-       are valid VOC tie rules, and the tier-agreement test pins them
+       EXACT IoU ties between distinct GTs the two may differ — both
+       are valid VOC tie rules, and tests/test_map_metric.py pins them
        equal on tie-free data).
     3. first-claimant window: a GT is claimed by the first (conf DESC,
        det_id ASC) detection whose best edge points at it — every
@@ -263,8 +265,7 @@ def voc_match_declarative(
 def voc07_average_precision(
     matched: DataFrame, ground_truth: DataFrame
 ) -> DataFrame:
-    """Per-class VOC07 11-point AP over the output of
-    :func:`voc_greedy_match`.
+    """Per-class VOC07 11-point AP over the output of either matcher.
 
     Classes are taken from ``ground_truth`` (a class with no GT boxes has
     undefined recall and is excluded, as in the VOC devkit). Returns

@@ -3,11 +3,12 @@
 stages; reference K3 renders mp4 via ffmpeg, main.py:47-66).
 
 A video travels as one opaque ``binary`` column + typed metadata, like
-images and audio. Real codec containers (mp4/h264) need external
-libraries this container doesn't have, so the REAL plumbing is proven on
-a raw packed container (header + concatenated RGB frames — what a
-decode-to-raw stage would hand downstream anyway), and the mp4 slot is
-an explicit stub with the identical contract:
+images and audio. Real codec containers (mp4/h264) need ffmpeg/pyav,
+which must be downloaded, so the plumbing is proven on a raw packed
+container (header + concatenated RGB frames — what a decode-to-raw stage
+would hand downstream anyway). An mp4 decoder, once installed, slots in
+with :func:`sample_frames`'s contract (same output schema and Arrow
+batch shape); nothing downstream changes:
 
 - :func:`encode_rawv` / :func:`decode_rawv_header` — pack/unpack the
   deterministic raw container (magic, n_frames, w, h, fps + planes)
@@ -15,7 +16,6 @@ an explicit stub with the identical contract:
   SAMPLED frame (every Nth, or k uniformly spaced), emitting the same
   (pixels, img_width, img_height) shape images.py transforms consume —
   sampled frames feed straight into resize/blur/encode_frames_png
-- :func:`decode_mp4_stub` — NotImplementedError carrying the contract
 
 Scale note: sampling happens INSIDE the Arrow batch before anything is
 materialized — a 30 fps clip sampled at k=8 ships 8 frames out of the
@@ -102,14 +102,3 @@ def sample_frames(
             yield pd.DataFrame(out)
 
     return videos.mapInPandas(run, schema=SAMPLED_FRAME_SCHEMA)
-
-
-def decode_mp4_stub(*_args, **_kwargs):
-    """mp4/h264 decode requires ffmpeg/pyav, absent in this container.
-    When available, implement with the exact contract of
-    :func:`sample_frames` (same output schema and Arrow batch shape);
-    nothing downstream changes — sampled frames already flow through
-    images.resize_shorter_edge / blur_regions / encode_frames_png."""
-    raise NotImplementedError(
-        "mp4 decode needs ffmpeg/pyav; see sample_frames for the contract"
-    )

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..tables import load
-from .registry import audit_round, materialize, production_tier, register
+from .registry import audit_round, materialize, register
 
 
 # --------------------------------------------------------------------------
@@ -564,14 +564,6 @@ def q103_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_quantizer,
     )
 
-    # tier switch (VERDICT r10 #5, the q105/q184 pattern): the default
-    # tier serves through the small-B codegen-literal probe/assignment;
-    # SPARK_GRAFT_TIER=production routes assignment AND probe through
-    # the declarative centroid-TABLE path (broadcast join + min-struct /
-    # sorted-collect aggregates) — no Python worker and O(1) plan size
-    # at ANY B, the shape a 100-TB serving deployment runs. Tier
-    # agreement is pinned in tests/test_ann_ivf.py.
-    decl = production_tier()
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = emb.filter(F.col("vec_id") % 5 != 0)
     delta = emb.filter(F.col("vec_id") % 5 == 0)  # the later arrivals
@@ -579,13 +571,13 @@ def q103_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         cents = train_quantizer(base, Q103_B)
         save_ivf_index(
-            assign_buckets(base, cents, declarative=decl), cents, f"{work}/ix"
+            assign_buckets(base, cents), cents, f"{work}/ix"
         )
         # incremental append: ONE cached assign+probe+append plan against
         # the STORED centroids (ann_ivf.append_vectors) — the drift probe
         # must admit this delta (same distribution as the training base),
         # proving the no-retrain fast path executed, not just plumbed
-        info = append_vectors(spark, f"{work}/ix", delta, declarative=decl)
+        info = append_vectors(spark, f"{work}/ix", delta)
         if not info["appended"]:
             raise AssertionError(f"in-distribution delta refused: {info}")
         grown, stored_cents = load_ivf_index(spark, f"{work}/ix")
@@ -594,12 +586,7 @@ def q103_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         )
         served = ivf_topk_batch(
-            grown,
-            stored_cents,
-            queries,
-            k=Q103_K,
-            nprobe=Q103_NPROBE,
-            declarative=decl,
+            grown, stored_cents, queries, k=Q103_K, nprobe=Q103_NPROBE
         )
         # Count-only result: which neighbors come back depends on the
         # trained centroids (KMeans float-order jitter), but the serving
@@ -911,13 +898,14 @@ def q151_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # HASH-GATED since r8 (VERDICT r7 #6 — previously the registry's one
 # rows-only-by-design query): the quantizer is now
-# ann_ivf.deterministic_lloyd — seedless md5-smallest init + exact Lloyd
-# rounds whose distances and means are integer-quantized, so the trained
-# centroids are bit-identical on any engine and the oracle replays the
-# ENTIRE pipeline (B = greatest(8, N//64) from count, init pick, both
-# unrolled Lloyd rounds with empty-bucket keep-prev, final assignment,
-# in-bucket pair join, rollup). MLlib KMeans remains the trainer where
-# replay isn't needed (q55/q70/q103); the recall-vs-brute-force floor
+# ann_ivf.deterministic_lloyd — seedless md5-smallest init + Lloyd
+# rounds whose means are integer-quantized; the oracle replays the
+# ENTIRE pipeline with integer-quantized distances (B = greatest(8,
+# N//64) from count, init pick, both unrolled Lloyd rounds with
+# empty-bucket keep-prev, final assignment, in-bucket pair join,
+# rollup), and the engine's matmul argmins agree with them bucket for
+# bucket. MLlib KMeans remains the trainer where replay isn't needed
+# (q70/q103); the recall-vs-brute-force floor
 # stays pinned in tests/test_reporting.py.
 #
 # Output: per-bucket near-dup summary (pairs found, max cosine) — the
@@ -1023,21 +1011,17 @@ def q184_semantic_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann_ivf import deterministic_lloyd, lloyd_assign
     from ..operators.similarity import dot, norm
 
-    # Tier switch (VERDICT r8 #1): the oracle/gate default trains AND
-    # assigns on the bit-replayable exact tier (integer-quantized argmin,
-    # O(N·B·d) codegen — the cost of end-to-end hash-gating a trained
-    # quantizer); bench/production (SPARK_GRAFT_TIER=production) routes
-    # assignment through the broadcast-matmul tier with the SAME B, init
-    # and quantized means — tier agreement is pinned in
-    # tests/test_ann_ivf.py.
-    exact = not production_tier()
+    # training and the final assignment run lloyd_assign's broadcast
+    # matmul (VERDICT r8 #1); the oracle replays them with
+    # integer-quantized argmins, which agree on this data (pinned in
+    # tests/test_ann_ivf.py)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").repartition(
         spark.sparkContext.defaultParallelism
     )
     n = emb.count()
     n_buckets = max(8, n // Q184_TARGET_BLOCK)
-    cents = deterministic_lloyd(emb, n_buckets, iters=Q184_ITERS, exact=exact)
-    bucketed = lloyd_assign(emb, cents, exact=exact).select(
+    cents = deterministic_lloyd(emb, n_buckets, iters=Q184_ITERS)
+    bucketed = lloyd_assign(emb, cents).select(
         "vec_id", "bucket", "embedding", norm(F.col("embedding")).alias("nm")
     )
     a = bucketed.select(
@@ -1069,8 +1053,8 @@ def q184_semantic_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q222 — HIERARCHICAL (two-level) IVF SemDeDup: the 100-TB answer to
 # q184's flat quantizer. A flat B ∝ N coarse quantizer eventually needs
-# the whole centroid set in one place (the exact tier broadcasts it; the
-# matmul tier collects it to the driver) — at ~1e9 vectors that is an
+# the whole centroid set in one place (lloyd_assign collects it to the
+# driver and broadcasts it) — at ~1e9 vectors that is an
 # ~8 GB table no single task should hold. Two levels remove the global
 # materialization entirely: level-1 trains B1 = max(2, isqrt(B)) cells
 # (tiny, broadcastable at any N), level-2 trains an INDEPENDENT per-cell

@@ -4,7 +4,7 @@ The reference evaluates every training epoch with gluoncv's
 ``VOC07MApMetric(iou_thresh=0.5)`` (train_yolov3.py:110, epoch loop at
 150-180) — a driver-side accumulator. Here the same metric is a
 distributed DataFrame computation (operators/map_metric.py): greedy VOC
-matching per (image, class) via cogrouped applyInPandas, then the
+matching as a declarative grid-bucketed plan, then the
 11-point-interpolated AP per class as rank/cumsum windows.
 
 The fixture detections/ground-truth derive from ``part`` with pure
@@ -16,7 +16,8 @@ ONE ground-truth box. Under that one-overlap geometry the greedy rule
 fallback") reduces exactly to a per-GT rank window, which is what makes
 the metric SQL-expressible for the oracle while the Spark side still
 runs the GENERAL greedy matcher (the multi-overlap case is pinned by
-tests/test_map_metric.py against hand-computed expectations).
+tests/test_map_metric.py against hand-computed expectations and the
+cogroup greedy walk).
 
 Fixture mix per part row p (GT box 400x400 at cell offset +100):
   det A (p%7!=0): same-size box jittered by (p*7%200, p*13%200) — IoU
@@ -34,11 +35,10 @@ from pyspark.sql import functions as F
 
 from ..operators.map_metric import (
     voc07_average_precision,
-    voc_greedy_match,
     voc_match_declarative,
 )
 from ..tables import load
-from .registry import materialize, production_tier, register
+from .registry import materialize, register
 
 # Shared derivation constants (mirrored literally in the oracle SQL).
 _N_IMAGES = 20
@@ -195,9 +195,9 @@ def _map_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         (gy1 + 850).alias("y2"),
     )
     dets = det_a.unionByName(det_b).unionByName(det_c)
-    # cell rides along as the GT id: the cogroup matcher selects its box
-    # columns explicitly (extra columns inert), and the declarative tier
-    # needs a deterministic per-GT identifier for its struct-max edge
+    # cell rides along as the GT id: the declarative matcher needs a
+    # deterministic per-GT identifier for its struct-max edge (the
+    # cogroup reference matcher selects its box columns explicitly)
     return dets, gt
 
 
@@ -205,7 +205,7 @@ def _map_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 # q105 — VOC07 mAP@0.5 (A9, train_yolov3.py:110): per-class 11-point AP
 # over greedy-matched detections, plus the epoch-level mAP row
 # (class_id = -1). The Spark side runs the GENERAL greedy matcher
-# (cogrouped applyInPandas); the oracle exploits the fixture's one-overlap
+# (voc_match_declarative); the oracle exploits the fixture's one-overlap
 # geometry to express the same matching as a rank window — value-hash
 # equality proves the general matcher agrees with the closed-form
 # reduction on this data.
@@ -213,21 +213,17 @@ def _map_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 @register("q105_voc_map", oracle=_MAP_ORACLE)
 def q105_voc_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     dets, gt = _map_fixture(spark, sf_dir)
-    # production tier (SPARK_GRAFT_TIER=production, the q184 pattern):
     # the fully declarative matcher — grid-bucketed IoU pairs +
     # struct-max best edge + first-claimant window, no Python cogroup,
-    # no per-group IoU matrix. The gate replays the cogroup tier;
-    # tier agreement is pytest-pinned (tests/test_map_metric.py).
-    if production_tier():
-        matched = voc_match_declarative(
-            dets, gt, iou_thresh=0.5, gt_id_col="cell", cell_size=512.0
-        )
-    else:
-        matched = voc_greedy_match(dets, gt, iou_thresh=0.5)
+    # no per-group IoU matrix. Agreement with the cogroup greedy walk
+    # (voc_greedy_match) is pytest-pinned (tests/test_map_metric.py).
+    matched = voc_match_declarative(
+        dets, gt, iou_thresh=0.5, gt_id_col="cell", cell_size=512.0
+    )
     # freeze the per-class AP table: both union branches (per-class rows
     # and the mAP summary aggregate) consume it, and without the barrier
-    # each re-runs the cogrouped python greedy matcher — the dominant
-    # cost — from scratch (r7 review)
+    # each re-runs the matcher — the dominant cost — from scratch
+    # (r7 review)
     ap = materialize(
         voc07_average_precision(matched, gt).select(
             "class_id", "n_pos", "n_det", "ap"

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load
-from .registry import audit_round, materialize, production_tier, register
+from .registry import audit_round, materialize, register
 
 
 # --------------------------------------------------------------------------
@@ -133,14 +133,14 @@ def q54_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q55 — trained-IVF ANN, HASH-GATED since r9 (VERDICT r8 #4: was rows-only
 # on MLlib KMeans, whose centroids are float-order-dependent). The trainer
 # is now ann_ivf.deterministic_lloyd (q184's engine-portable quantizer:
-# seedless md5-smallest init, integer-quantized distances and means), the
-# probe ranking is probe_buckets_exact (same integer distance — numpy's
-# pairwise-summed floats are the one fold DuckDB can't replay), and the
-# in-bucket top-5 follows q26's convention (raw-cosine order: sequential
-# folds are bit-identical on both engines; ties -> vec_id). The oracle
-# replays training, probe choice, pruned scan and ranking end-to-end.
-# MLlib KMeans remains the production trainer elsewhere (q70/q103);
-# ivf_topk (numpy probe) agreement with this exact tier is pinned in
+# seedless md5-smallest init, integer-quantized means), the probe ranking
+# is a sequential double fold (numpy's pairwise-summed floats are the one
+# fold DuckDB can't replay), and the in-bucket top-5 follows q26's
+# convention (raw-cosine order: sequential folds are bit-identical on
+# both engines; ties -> vec_id). The oracle replays training, probe
+# choice, pruned scan and ranking end-to-end with integer-quantized
+# distances. MLlib KMeans remains the trainer of q70/q103; ivf_topk
+# (numpy probe) agreement with this plan is pinned in
 # tests/test_ann_ivf.py. Top-5 neighbors of vec_id=0 probing 3 of 8
 # trained buckets — the production shape of q27's bucket pruning.
 # --------------------------------------------------------------------------
@@ -173,52 +173,29 @@ def _q55_oracle() -> str:
 @register("q55_ann_ivf", oracle=_q55_oracle())
 def q55_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann_ivf import (
-        assign_buckets_exact,
+        assign_buckets,
+        centroid_list,
         deterministic_lloyd,
-        probe_buckets_exact,
+        probe_buckets_table,
     )
     from ..operators.similarity import cosine
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # snapshot the trained 8-row centroid frame: it feeds BOTH the probe
-    # ranking (streamed side) and the corpus assignment (broadcast side),
-    # and the two subtrees are not identical exchanges, so without the
-    # barrier the full O(N·B·d) training lineage executes twice per
-    # action (r9 round-diff review). materialize() — not a raw
+    # ranking and the centroid collect behind the corpus assignment, so
+    # without the barrier the full O(N·B·d) training lineage executes
+    # twice (r9 round-diff review). materialize() — not a raw
     # localCheckpoint — so the plan audit still sees the training joins.
-    # tier switch (VERDICT r10 #5): the gate default trains AND serves
-    # on the bit-replayable exact tier (integer-quantized distances);
-    # SPARK_GRAFT_TIER=production keeps the SAME seedless init and
-    # quantized means but routes corpus assignment and the probe
-    # ranking through the declarative centroid-TABLE path
-    # (assign_buckets_table / probe_buckets_table: broadcast join +
-    # min-struct / sorted-collect aggregates — no Python, O(1) plan
-    # size in B, O(N) shuffle). Tier agreement pinned in
-    # tests/test_ann_ivf.py; double-vs-quantized argmins can only
-    # disagree on pairs closer than the quantization step.
-    exact = not production_tier()
-    cents = materialize(deterministic_lloyd(emb, 8, iters=2, exact=exact))
+    cents = materialize(deterministic_lloyd(emb, 8, iters=2))
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    if exact:
-        bucketed = assign_buckets_exact(emb, cents)
-        pb = probe_buckets_exact(cents, q, nprobe=3)
-    else:
-        from ..operators.ann_ivf import (
-            assign_buckets,
-            centroid_list,
-            probe_buckets_table,
-        )
-
-        # assign_buckets(declarative=True) is the no-Python guarantee:
-        # at B = 8 it is the literal-codegen projection (fastest shape
-        # at small B — sf1.0: 10.4 s vs 18.1 s for the table aggregate);
-        # past the codegen cap it becomes the broadcast-table aggregate
-        bucketed = assign_buckets(
-            emb, centroid_list(cents), declarative=True
-        )
-        pb = probe_buckets_table(
-            q.select(F.lit(0).alias("qid"), "qvec"), cents, nprobe=3
-        ).select(F.explode("probe_buckets").alias("bucket"))
+    # serving runs no Python: at B = 8 assign_buckets is the
+    # literal-codegen projection (fastest shape at small B — sf1.0:
+    # 10.4 s vs 18.1 s for the table aggregate), and the probe ranking
+    # is the broadcast centroid-table aggregate
+    bucketed = assign_buckets(emb, centroid_list(cents))
+    pb = probe_buckets_table(
+        q.select(F.lit(0).alias("qid"), "qvec"), cents, nprobe=3
+    ).select(F.explode("probe_buckets").alias("bucket"))
     cand = (
         bucketed.filter(F.col("vec_id") != 0)
         .join(F.broadcast(pb), "bucket")  # pruned scan: ~nprobe/B of corpus
@@ -502,13 +479,9 @@ def q70_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_quantizer,
     )
 
-    # tier switch (VERDICT r10 #5): production serves assignment and
-    # probe through the declarative centroid-table path — no Python in
-    # the probe path at any B; see q103's note
-    decl = production_tier()
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids = train_quantizer(emb, n_buckets=8)
-    bucketed = assign_buckets(emb, centroids, declarative=decl).cache()
+    bucketed = assign_buckets(emb, centroids).cache()
     work = tempfile.mkdtemp(prefix="ivf_idx_")
     try:
         save_ivf_index(bucketed, centroids, work)
@@ -521,16 +494,14 @@ def q70_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_queries = queries.count()
         # k x n_queries rows each — collect once, multiset-diff driver-side
         # (identical float paths on both sides, so exact equality is the bar)
-        mem_df = ivf_topk_batch(
-            bucketed, centroids, queries, k=5, nprobe=3, declarative=decl
-        )
+        mem_df = ivf_topk_batch(bucketed, centroids, queries, k=5, nprobe=3)
         # capture the batch probe-join plan (broadcast probe side — the
         # r12 _probe_topk hint) for the plan evidence files
         audit_round("q70:probe_batch", mem_df)
         mem = sorted(map(tuple, mem_df.collect()))
         loaded = sorted(
             map(tuple, ivf_topk_batch(
-                corpus2, cents2, queries, k=5, nprobe=3, declarative=decl
+                corpus2, cents2, queries, k=5, nprobe=3
             ).collect())
         )
         rows_mem, rows_loaded = len(mem), len(loaded)

@@ -33,19 +33,6 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def production_tier() -> bool:
-    """True when SPARK_GRAFT_TIER=production — registry queries that carry
-    BOTH a bit-replayable (oracle-gated) plan and a faster
-    production-equivalent plan (q184's exact-Lloyd vs broadcast-matmul
-    assignment, VERDICT r8 #1) route through the fast tier. Default is
-    the replayable tier, so the correctness gate and any ad-hoc run always
-    measure the hash-gated path; bench.py opts into the production tier
-    explicitly and annotates the affected queries in BENCH_DETAIL."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_TIER", "replay") == "production"
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """Distributed materialization barrier: compute ``df`` NOW and return a
     DataFrame backed by the stored result blocks (eager localCheckpoint).

@@ -19,8 +19,8 @@ video rendering (K3, main.py:47-66: one mp4 per camera directory via
 ffmpeg): the container semantics are REAL via :func:`render_avi_videos` —
 one uncompressed RIFF AVI per frame group, stdlib codec
 (functions/avi.py), written from the executors. Only the libx264
-*compression* step stays env-blocked: :func:`render_videos` remains the
-documented mp4 stub.
+*compression* step is missing (ffmpeg must be downloaded); an mp4
+deployment swaps the per-group ``encode_avi`` call for an ffmpeg pipe.
 """
 
 from __future__ import annotations
@@ -271,15 +271,6 @@ def write_recordio_files(
         write,
         schema="split string, n_records bigint, rec_bytes bigint, idx_records bigint",
     )
-
-
-def render_videos(*_args, **_kwargs):
-    """K3 mp4 variant (ffmpeg/libx264, main.py:47-66): the compression
-    codec is not present in this container. The container/grouping
-    semantics are implemented for real in :func:`render_avi_videos`;
-    swapping the per-group ``encode_avi`` call for an ffmpeg pipe is the
-    only change an mp4 deployment needs."""
-    raise NotImplementedError("mp4 rendering needs ffmpeg; use render_avi_videos (uncompressed) or see docstring")
 
 
 def write_webdataset_shards(

@@ -17,6 +17,10 @@ implementations with identical semantics:
 
 The equality of the two on the same finite input is asserted in tests —
 the same batch==stream contract q35/q41 established for aggregation.
+
+A ``transformWithStateInPandas`` form (typed state, first-class timers)
+waits for a download: its state-server protocol needs the ``protobuf``
+package.
 """
 
 from __future__ import annotations
@@ -99,101 +103,3 @@ def sessionize_stream(events_stream: DataFrame, gap_sec: int = SESSION_GAP_SEC) 
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas twin (ROADMAP "transformWithState migration"
-# — the Spark 4 arbitrary-state API is present in this env's PySpark
-# 4.1.2). Same gap-session semantics as sessionize_stream, expressed as a
-# StatefulProcessor with one ValueState. Differences that matter at
-# scale, and why the new API is the forward path:
-#   - state is TYPED and composable (Value/List/Map per key, independent
-#     TTLs) instead of one monolithic tuple;
-#   - timers are first-class (registerTimer) rather than a single
-#     timeout mode, so idle-session eviction can coexist with
-#     availableNow triggers;
-#   - initial state can be bootstrapped from a batch DataFrame
-#     (initialState=), which is how a production migration carries
-#     checkpointed applyInPandasWithState state across.
-# The old-API form stays as the compatibility tier (and the one this
-# env can RUN): transformWithStateInPandas's state-server protocol
-# speaks protobuf between the JVM and the Python driver worker
-# (pyspark/sql/streaming/proto/StateMessage_pb2.py), and the `protobuf`
-# package is not installed in this sandbox (no pip) — measured failure:
-# STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE / ImportError
-# "cannot import name 'descriptor' from 'google.protobuf'". The gate
-# below therefore requires BOTH the API and a working protobuf;
-# tests/test_sessionize.py pins the gate and the NotImplementedError
-# contract here, and the batch==stream equality on the runnable
-# old-API form.
-# --------------------------------------------------------------------------
-try:  # pragma: no cover - availability gate, exercised via the factory below
-    import importlib.util as _ilu
-
-    if _ilu.find_spec("google.protobuf") is None:  # runtime protocol dep
-        raise ImportError("google.protobuf missing")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _SessionizeProcessor(StatefulProcessor):
-        def __init__(self, gap_sec: int) -> None:
-            self._gap_us = gap_sec * 1_000_000
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("session", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._state.exists():
-                last_ts_us, session_id = self._state.get()
-            else:
-                last_ts_us, session_id = None, -1
-            # same multi-chunk discipline as _stream_fn: concatenate the
-            # ts series only, then sort ONCE per key per micro-batch
-            chunks = [pdf["ts"] for pdf in rows if len(pdf)]
-            all_ts = (
-                pd.concat(chunks).sort_values()
-                if chunks
-                else pd.Series([], dtype="datetime64[ns]")
-            )
-            out_ts, out_sid = [], []
-            for ts in all_ts:
-                ts_us = int(ts.value // 1000)
-                if last_ts_us is None or ts_us - last_ts_us > self._gap_us:
-                    session_id += 1
-                last_ts_us = ts_us
-                out_ts.append(ts)
-                out_sid.append(session_id)
-            if last_ts_us is not None:
-                self._state.update((last_ts_us, session_id))
-            yield pd.DataFrame(
-                {"user_id": user_id, "session_id": out_sid, "ts": out_ts}
-            )
-
-        def close(self) -> None:
-            pass
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover - older PySpark
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-def sessionize_stream_tws(
-    events_stream: DataFrame, gap_sec: int = SESSION_GAP_SEC
-) -> DataFrame:
-    """transformWithStateInPandas sessionizer — semantics identical to
-    :func:`sessionize_stream`; see the migration note above."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the StatefulProcessor API "
-            "(PySpark >= 4.0) AND the protobuf package for its state-server "
-            "protocol; this environment lacks protobuf — use "
-            "sessionize_stream (applyInPandasWithState) instead"
-        )
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionizeProcessor(gap_sec),
-        outputStructType=STREAM_OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

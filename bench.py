@@ -55,23 +55,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Per-query measurement caveats, copied into BENCH_DETAIL.json so a
 # committed snapshot is self-describing (VERDICT r8 #3: q32's 0.04 s
-# warm median was mistaken for decode cost). Three classes:
+# warm median was mistaken for decode cost). Two classes:
 #   memoized  — the query shares a session-memoized fixture/stage, so
 #               repeat samples (and any run after the first consumer)
 #               are warm; the FIRST sample carries the real cost.
 #   shared    — the query consumes a stage computed once per session for
 #               a family (cluster family's pair-gen + connected
 #               components); whichever family member runs first pays it.
-#   tier      — the query ran its production tier (SPARK_GRAFT_TIER);
-#               the correctness gate replays the slower oracle tier.
 QUERY_ANNOTATIONS = {
     "q32_bag_decode": "memoized: demo-bag decode cached per session; repeats are warm",
-    "q33_png_export": "memoized: shares q32's decoded demo bag",
-    "q184_semantic_dedup_ivf": "tier: production (broadcast-matmul assignment); gate replays exact Lloyd",
-    "q105_voc_map": "tier: production (declarative grid-bucketed matcher); gate replays the cogroup greedy walk",
-    "q55_ann_ivf": "tier: production (declarative table assign/probe); gate replays the integer-quantized tier",
-    "q70_ivf_index_persist": "tier: production (declarative table assign/probe)",
-    "q103_ivf_incremental": "tier: production (declarative table assign/probe)",
+    "q33_frame_table": "memoized: shares q32's decoded demo bag",
     "q54_dedup_clusters": "shared: pair-gen+CC stage computed once per session for q54/q157/q203/q205",
     "q157_cluster_representatives": "shared: reuses the q54-family pair-gen+CC stage",
     "q203_cluster_aware_split": "shared: reuses the q54-family pair-gen+CC stage",
@@ -144,12 +137,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    # Bench measures the PRODUCTION tier where a query ships both a
-    # bit-replayable gate plan and a faster equivalent (q184's
-    # broadcast-matmul assignment vs exact-Lloyd codegen, VERDICT r8 #1);
-    # the correctness gate runs without this env and keeps the replay
-    # tier. Affected queries are listed in QUERY_ANNOTATIONS.
-    os.environ.setdefault("SPARK_GRAFT_TIER", "production")
 
     import __spark_entry__ as se
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.session import (

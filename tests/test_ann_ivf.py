@@ -68,25 +68,9 @@ def test_ivf_batch_matches_per_query(spark):
     bucketed.unpersist()
 
 
-def test_large_b_vectorized_matches_codegen(spark):
-    """B=64 > _CODEGEN_MAX_B routes through the broadcast-matrix Pandas
-    UDF; it must assign the same buckets as the codegen literal path."""
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
-        _nearest_centroid,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    centroids = train_quantizer(emb, n_buckets=64)
-    vec = assign_buckets(emb, centroids)  # vectorized (64 > 32)
-    ref = emb.withColumn("bucket", _nearest_centroid("embedding", centroids))
-    got = {r.vec_id: r.bucket for r in vec.collect()}
-    want = {r.vec_id: r.bucket for r in ref.collect()}
-    assert got == want
-
-
 def test_large_b_batch_probe_matches_driver_numpy(spark):
-    """B=256: batched probe selection (Pandas-UDF path) must match the
-    driver-side numpy probe order used by single-query ivf_topk."""
+    """B=256: batched probe selection (centroid-table path) must match
+    the driver-side numpy probe order used by single-query ivf_topk."""
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
         ivf_topk_batch,
     )
@@ -254,13 +238,13 @@ def test_append_drift_gate(spark, tmp_path):
 
 
 def test_lloyd_tier_agreement(spark):
-    """The production (broadcast-matmul) tier must train the SAME
-    centroids and assign the SAME buckets as the bit-replayable exact
-    tier on the test corpus (VERDICT r8 #1: q184 routes through the fast
-    tier under SPARK_GRAFT_TIER=production while the gate replays the
-    exact tier — any divergence here would make bench and gate measure
-    different answers)."""
+    """Lloyd training assigns by broadcast matmul (lloyd_assign), while
+    the hash gate's oracle replays the integer-quantized argmin
+    (assign_buckets_exact): the two must agree bucket for bucket on the
+    test corpus, or the gate would certify centroids the engine does
+    not train."""
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
+        assign_buckets_exact,
         deterministic_lloyd,
         lloyd_assign,
     )
@@ -268,25 +252,17 @@ def test_lloyd_tier_agreement(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    # B=8 exercises the codegen branch; B=40 (> _CODEGEN_MAX_B) the
-    # pandas_udf/BLAS branch — the one q184's production tier actually
-    # takes at real scale, where B = N//64 > 32 (r9 round-diff review)
+    # B=8 is q55's size; B=40 the range q184 takes at real scale, where
+    # B = N//64 > 32 (r9 round-diff review)
     for n_buckets in (8, 40):
-        cents_exact = deterministic_lloyd(emb, n_buckets, iters=2, exact=True)
-        cents_fast = deterministic_lloyd(emb, n_buckets, iters=2, exact=False)
-        ce = {r.bucket: list(r.centroid) for r in cents_exact.collect()}
-        cf = {r.bucket: list(r.centroid) for r in cents_fast.collect()}
-        assert ce == cf  # bit-identical: same init, same quantized means
-
-        ae = {
+        cents = deterministic_lloyd(emb, n_buckets, iters=2)
+        assert cents.count() == n_buckets
+        exact = {
             r.vec_id: r.bucket
-            for r in lloyd_assign(emb, cents_exact, exact=True).collect()
+            for r in assign_buckets_exact(emb, cents).collect()
         }
-        af = {
-            r.vec_id: r.bucket
-            for r in lloyd_assign(emb, cents_exact, exact=False).collect()
-        }
-        assert ae == af
+        matmul = {r.vec_id: r.bucket for r in lloyd_assign(emb, cents).collect()}
+        assert matmul == exact and len(exact) == emb.count()
 
 
 def test_lloyd_domain_guard(spark):
@@ -308,9 +284,10 @@ def test_lloyd_domain_guard(spark):
 
 
 def test_probe_exact_matches_numpy_probe(spark):
-    """q55's bit-replayable probe tier (int-quantized distances) must pick
-    the same nprobe buckets and the same top-k as the numpy/BLAS ivf_topk
-    serve path on the test corpus — the two tiers answer the same query."""
+    """The bit-replayable probe (int-quantized distances, what the q55
+    oracle replays and q224 runs) must pick the same nprobe buckets as
+    the numpy ivf_topk serve path on the test corpus, and q55's top-k
+    must equal ivf_topk's over the exact-assigned corpus."""
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
         assign_buckets_exact,
         centroid_list,
@@ -554,116 +531,69 @@ def test_pq_subvectors_rejects_indivisible_dim(spark):
     assert pq_subvectors(emb, 5).count() == 5
 
 
-def test_declarative_tier_agreement(spark):
-    """VERDICT r10 #5: the production (declarative, no-Python) IVF tier
-    must agree with the default tiers —
-
-    - assign_buckets_table == assign_buckets (codegen literal argmin)
-      bucket-for-bucket;
-    - probe_buckets_table == the codegen probe ranking per query;
-    - ivf_topk_batch(declarative=True) == the default serve tier
-      row-for-row;
-    - and the declarative serve plan runs NO Python node even at
-      B > _CODEGEN_MAX_B (where the default tier falls back to a
-      pandas UDF)."""
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
-        _CODEGEN_MAX_B,
-        assign_buckets_table,
-        ivf_topk_batch,
-        probe_buckets_table,
-    )
-
+def _large_b_setup(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    centroids = train_quantizer(emb, n_buckets=8)
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
+        _CODEGEN_MAX_B,
+    )
 
-    # assignment agreement (double fold vs literal codegen — identical
-    # sequential arithmetic, so exact equality is the bar)
-    default_assign = {
-        (r.vec_id, r.bucket)
-        for r in assign_buckets(emb, centroids).select("vec_id", "bucket").collect()
-    }
-    decl_assign = {
-        (r.vec_id, r.bucket)
-        for r in assign_buckets_table(emb, centroids).select("vec_id", "bucket").collect()
-    }
-    assert decl_assign == default_assign
+    centroids = train_quantizer(emb, n_buckets=_CODEGEN_MAX_B + 8)
+    return emb, centroids
 
-    # probe + serve agreement
+
+def test_large_b_vectorized_matches_codegen(spark, monkeypatch):
+    """Past _CODEGEN_MAX_B, assign_buckets switches from the literal-codegen
+    argmin to the broadcast centroid table. It must assign what the literal
+    path assigns at the same B (forced here by raising the cap), and plan
+    no Python node."""
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators import (
+        ann_ivf,
+    )
+
+    emb, centroids = _large_b_setup(spark)
+    bucketed = assign_buckets(emb, centroids)
+    plan = bucketed._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
+    got = {(r.vec_id, r.bucket) for r in bucketed.collect()}
+
+    monkeypatch.setattr(ann_ivf, "_CODEGEN_MAX_B", len(centroids))
+    want = {(r.vec_id, r.bucket) for r in assign_buckets(emb, centroids).collect()}
+    assert got == want
+    assert len(got) == emb.count()
+
+
+def test_declarative_tier_agreement(spark, monkeypatch):
+    """Past _CODEGEN_MAX_B, ivf_topk_batch serves through the centroid
+    table (probe_buckets_table) instead of the literal-codegen probe
+    ranking. The served top-k must match the literal path at the same B
+    (forced by raising the cap), and the serve plan runs no Python node."""
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators import (
+        ann_ivf,
+    )
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.ann_ivf import (
+        ivf_topk_batch,
+    )
+
+    emb, centroids = _large_b_setup(spark)
     qids = [0, 1, 2]
     queries = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    probes = {
-        r.qid: list(r.probe_buckets)
-        for r in probe_buckets_table(queries, centroids, nprobe=3).collect()
-    }
-    assert set(probes) == set(qids) and all(len(v) == 3 for v in probes.values())
 
-    bucketed = assign_buckets(emb, centroids).cache()
-    corpus = bucketed.filter(~F.col("vec_id").isin(qids))
-    base = sorted(
-        map(tuple, ivf_topk_batch(corpus, centroids, queries, k=5, nprobe=3).collect())
-    )
-    decl = sorted(
-        map(
-            tuple,
-            ivf_topk_batch(
-                corpus, centroids, queries, k=5, nprobe=3, declarative=True
-            ).collect(),
-        )
-    )
-    assert decl == base
-    bucketed.unpersist()
+    def serve():
+        corpus = assign_buckets(emb, centroids).filter(~F.col("vec_id").isin(qids))
+        return ivf_topk_batch(corpus, centroids, queries, k=5, nprobe=3)
 
-    # no-Python guarantee where it matters: a centroid count past the
-    # codegen cap would push the DEFAULT tier to a pandas UDF; the
-    # declarative plan must stay JVM-only
-    big_b = _CODEGEN_MAX_B + 4
-    cents_big = [[float(i == j % 64) for i in range(64)] for j in range(big_b)]
-    served = ivf_topk_batch(
-        assign_buckets_table(emb, cents_big),
-        cents_big,
-        queries,
-        k=3,
-        nprobe=2,
-        declarative=True,
-    )
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    topk = serve()
+    plan = topk._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan
+    got = sorted(map(tuple, topk.collect()))
 
-
-def test_q55_q70_q103_tier_agreement(spark, monkeypatch):
-    """Cross-tier pin for the registry queries themselves (the
-    q105/q184 pattern): replay and production tiers must produce the
-    same rows."""
-    import importlib
-
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans import (
-        registry,
-    )
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.analytics import (
-        q103_ivf_incremental,
-    )
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.grouped import (
-        q55_ann_ivf,
-        q70_ivf_index_persist,
-    )
-
-    def rows(fn):
-        return sorted(map(tuple, fn(spark, SF_DIR).collect()))
-
-    out = {}
-    for tier in ("replay", "production"):
-        monkeypatch.setenv("SPARK_GRAFT_TIER", tier)
-        assert registry.production_tier() == (tier == "production")
-        out[tier] = {
-            "q55": rows(q55_ann_ivf),
-            "q70": rows(q70_ivf_index_persist),
-            "q103": rows(q103_ivf_incremental),
-        }
-    assert out["replay"] == out["production"]
+    monkeypatch.setattr(ann_ivf, "_CODEGEN_MAX_B", len(centroids))
+    assert got == sorted(map(tuple, serve().collect()))
+    assert {r[0] for r in got} == set(qids)
 
 
 def test_expr_memo_identity_and_parity(spark):

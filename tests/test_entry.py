@@ -50,3 +50,11 @@ def test_functions_roundtrip(spark):
     ).first()
     assert out.rt == out.ip
     assert out.iso_s == "2020-12-16T23_32_19.969307"
+
+
+def test_bench_annotations_name_registry_queries():
+    """Every QUERY_ANNOTATIONS key in bench.py must be a registry query;
+    a misspelled key never reaches its query's BENCH_DETAIL row."""
+    import bench
+
+    assert set(bench.QUERY_ANNOTATIONS) <= set(se.queries())

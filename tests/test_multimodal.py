@@ -1,5 +1,5 @@
 """Audio/video multimodal operators: WAV round-trip, feature math,
-raw-video frame sampling, stub contracts."""
+raw-video frame sampling."""
 
 import numpy as np
 import pytest
@@ -7,13 +7,11 @@ import pytest
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.audio import (
     audio_features,
     decode_audio,
-    decode_compressed_stub,
     decode_wav,
     encode_wav,
     resample_nearest,
 )
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.video import (
-    decode_mp4_stub,
     decode_rawv_header,
     encode_rawv,
     sample_frames,
@@ -116,13 +114,6 @@ def test_sampled_frames_feed_image_transforms(spark):
     for i in range(2):
         pix, w, h, ch = decode_png(pngs[i])
         assert (w, h, ch) == (8, 6, 3) and pix == frames[i].tobytes()
-
-
-def test_stub_contracts():
-    with pytest.raises(NotImplementedError):
-        decode_compressed_stub()
-    with pytest.raises(NotImplementedError):
-        decode_mp4_stub()
 
 
 def test_dhash_brightness_invariant_and_structure_sensitive():

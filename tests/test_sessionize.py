@@ -63,81 +63,3 @@ def test_stream_sessionizer_matches_batch(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_batch)
         shutil.rmtree(work, ignore_errors=True)
 
-
-def test_transform_with_state_sessionizer_gate(spark):
-    """The Spark-4 StatefulProcessor twin is code-complete but its
-    state-server protocol needs protobuf, which this sandbox lacks (no
-    pip). Pin the gate: when the runtime dep is absent the factory fails
-    loudly with the documented NotImplementedError; when present (a real
-    cluster), the twin runs and must match the batch window — that branch
-    self-activates once protobuf exists."""
-    import importlib.util
-
-    import pytest
-
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.streaming.sessionize import (
-        HAS_TRANSFORM_WITH_STATE,
-        sessionize_stream_tws,
-    )
-
-    rows = []
-    eid = 0
-    for u in range(4):
-        t = 1_700_000_000
-        for i in range(30):
-            t += 2000 if (i % 5) else 2200 * u + 2 * 3600
-            rows.append((eid, u, t))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, sec bigint"
-    ).select("event_id", "user_id", F.timestamp_seconds("sec").alias("ts"))
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent package 'google' absent entirely
-        has_protobuf = False
-    # the module gate requires BOTH conditions (protobuf runtime dep AND
-    # the PySpark>=4 StatefulProcessor API) — asserting on protobuf alone
-    # would fail spuriously on PySpark 3.x with protobuf installed
-    try:
-        importlib.import_module("pyspark.sql.streaming.stateful_processor")
-        has_api = True
-    except ImportError:
-        has_api = False
-    assert HAS_TRANSFORM_WITH_STATE == (has_protobuf and has_api)
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            sessionize_stream_tws(df)
-        return
-
-    batch = {
-        (r.user_id, str(r.ts)): r.session_id for r in sessionize_batch(df).collect()
-    }
-    work = tempfile.mkdtemp(prefix="t_sess_tws_")
-    prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        os.makedirs(f"{work}/in")
-        df.select("user_id", "ts").write.parquet(f"{work}/in/events")
-        schema = spark.read.parquet(f"{work}/in/events").schema
-        stream = spark.readStream.schema(schema).parquet(f"{work}/in/events")
-        out = sessionize_stream_tws(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("sess_tws_out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        streamed = {
-            (r.user_id, str(r.ts)): r.session_id
-            for r in spark.table("sess_tws_out").collect()
-        }
-        assert streamed == batch
-        assert max(batch.values()) >= 1
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_batch)
-        shutil.rmtree(work, ignore_errors=True)

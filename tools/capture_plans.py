@@ -15,9 +15,8 @@ Usage:
 e.g. ``python tools/capture_plans.py plans/r12 after q42_embedding_neardup``
 writes ``plans/r12/q42_embedding_neardup_after.txt``. Run it from the tree
 whose plans you want (a git worktree of the baseline commit for the
-``before`` side). The header records tree + tier so the evidence is
-self-describing. SPARK_GRAFT_TIER defaults to production to match the
-bench's measured tier.
+``before`` side). The header records the tree so the evidence is
+self-describing.
 """
 
 from __future__ import annotations
@@ -34,7 +33,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", "/root/testdata/sf0.1")
 def main() -> int:
     outdir, suffix, *names = sys.argv[1:]
     os.makedirs(outdir, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_TIER", "production")
 
     import __spark_entry__ as se
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.registry import (
@@ -67,8 +65,7 @@ def main() -> int:
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(
-                f"== {name}_{suffix} (tree {tree}, tier "
-                f"{os.environ['SPARK_GRAFT_TIER']}, sf_dir {SF_DIR};"
+                f"== {name}_{suffix} (tree {tree}, sf_dir {SF_DIR};"
                 " registry-level plan, barriers on) ==\n"
             )
             f.write(plan)

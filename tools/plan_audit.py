@@ -48,24 +48,22 @@ DEFAULT_SF = "/root/testdata/sf0.001"
 # three previously-hidden rows, each verified individually:
 #   q105_voc_map (8)      — crossJoin/range-join vs the FIXED 11-point
 #                           VOC recall grid (11 rows, O(1)).
-#   q55_ann_ivf (18)      — deterministic-Lloyd training + probe against
-#                           B=8 literal centroids and a one-row query;
-#                           every broadcast side is <= 8 rows.
-#   q222_hierarchical_semdedup (48) — level-1 of the two-level
-#                           quantizer: crossJoin(broadcast(cents1)) with
-#                           B1 = isqrt(B) rows (sublinear-bounded: ~4000
-#                           rows even at 1e9 vectors), repeated through
-#                           the unshared training lineage the audit's
-#                           no-barrier view exposes. Level 2 is an
-#                           equi-join on cell — no BNLJ by construction.
-#   q184_semantic_dedup_ivf (16) — the exact-replay Lloyd tier's
-#                           crossJoin(broadcast(cents)) with B ∝ N/64:
-#                           NOT O(1), but the documented SemDeDup
-#                           trade-off (the oracle-replayable assignment
-#                           is O(N·B·d) by design; production runs route
-#                           through the broadcast-matmul tier via
-#                           SPARK_GRAFT_TIER=production, which replaces
-#                           these BNLJs with a pandas_udf argmin).
+#   q55_ann_ivf (4)       — the probe ranking's one-row query against
+#                           the 8-row broadcast centroid table, and the
+#                           one-row query vector broadcast onto the
+#                           candidates (Lloyd training assigns by matmul,
+#                           no join).
+#   q222_hierarchical_semdedup (24) — level-1 of the two-level
+#                           quantizer: the final cell assignment's
+#                           crossJoin(broadcast(cents1)) with B1 =
+#                           isqrt(B) rows (sublinear-bounded: ~4000 rows
+#                           even at 1e9 vectors), repeated through the
+#                           unshared lineage the audit's no-barrier view
+#                           exposes. Level 2 is an equi-join on cell —
+#                           no BNLJ by construction.
+# Formatted plans list every node twice (tree + details), so each join
+# counts 2. q184_semantic_dedup_ivf has no row: its Lloyd training and
+# assignment are a broadcast-matmul pandas UDF, no join.
 # Iterative operators' per-round plans (connected-components rounds, the
 # shared family stage, q230's greedy argmax, q91's PageRank rounds,
 # q114's gram pass, q228's boundary probe) are captured at build time
@@ -104,19 +102,18 @@ BNLJ_WHITELIST = {
     "q193_weighted_median": 2,
     "q195_ndcg_eval": 6,
     "q196_rfm_segments": 2,
-    "q184_semantic_dedup_ivf": 16,
     "q219_tpch_q22": 2,
     "q221_tpch_q11": 2,
-    "q222_hierarchical_semdedup": 48,
+    "q222_hierarchical_semdedup": 24,
     # q224 full IVFADC: every BNLJ is one of (a) crossJoin(broadcast(
-    # cents1)) with B=8 LITERAL rows (coarse training + final cell
-    # assignment), (b) probe_buckets_exact's broadcast of the ONE-ROW
-    # query frame, or (c) the per-probed-cell query-residual build,
-    # broadcast of the same one-row frame — all O(1) sides. The count is
-    # high because the audit's no-barrier view unrolls the training
-    # lineage through three materialize() barriers (the q222 pattern);
-    # at execution each barrier runs its plan once.
-    "q224_ivfadc_topk": 78,
+    # cents1)) with B=8 LITERAL rows (the final cell assignment; coarse
+    # training assigns by matmul), (b) probe_buckets_exact's broadcast
+    # of the ONE-ROW query frame, or (c) the per-probed-cell
+    # query-residual build, broadcast of the same one-row frame — all
+    # O(1) sides. The count is high because the audit's no-barrier view
+    # unrolls the lineage through three materialize() barriers (the q222
+    # pattern); at execution each barrier runs its plan once.
+    "q224_ivfadc_topk": 28,
     # q226's truth tier is the q151 shape: a bounded |Q|-row query frame
     # crossJoined against the corpus for the exact-top-K ground truth —
     # the eval tier the docstring caps at Q226_NQ.
@@ -146,7 +143,7 @@ BNLJ_WHITELIST = {
     # boundary probe, see ROUND_BNLJ_WHITELIST).
     "q228_dsir_selection": 2,
     "q26_cosine_topk": 2,
-    "q55_ann_ivf": 18,
+    "q55_ann_ivf": 4,
     "q78_quantized_retrieval": 4,
     "q80_bm25": 2,
     "q81_tfidf_terms": 2,
@@ -170,11 +167,10 @@ ROUND_BNLJ_WHITELIST = {
     # q55's r12 `audit_round("q55:serve_topk", ...)` capture is the
     # SAME tree as its final plan (the registry materialize barrier is
     # a no-op under SPARK_GRAFT_AUDIT_NO_BARRIER, so the capture does
-    # not truncate): the 18 BNLJs are the final-plan whitelist's exact
-    # shapes — crossJoin(broadcast(q)) one-row query scalars and
-    # crossJoin(broadcast(cents)) 8-row centroid fans inside the
-    # un-barriered Lloyd lineage — counted a second time, not new joins.
-    "q55_ann_ivf": 18,
+    # not truncate): the 4 BNLJs are the final-plan whitelist's exact
+    # shapes — the one-row query against the 8-row centroid table and
+    # crossJoin(broadcast(q)) — counted a second time, not new joins.
+    "q55_ann_ivf": 4,
 }
 
 
@@ -278,10 +274,6 @@ def main() -> None:
     import os
 
     os.environ["SPARK_GRAFT_AUDIT_NO_BARRIER"] = "1"
-    # pin the replay tier: an ambient SPARK_GRAFT_TIER=production (e.g. a
-    # shell that just ran bench.py) would silently audit the matmul tier
-    # and report a misleading whitelist violation for q184 (r9 review)
-    os.environ["SPARK_GRAFT_TIER"] = "replay"
 
     import __spark_entry__ as se
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.session import (

@@ -15,7 +15,7 @@ in-suite numbers (measured on q70: 31 s fresh vs 6.5 s after 60 warm
 queries, identical code).
 
 SPARK_GRAFT_CHECK_SF_DIR overrides the data dir (default sf0.1 — the
-bench SF). Tier defaults to production, matching bench.py.
+bench SF).
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ def main() -> int:
     name = sys.argv[1]
     repeat = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     warm_n = int(sys.argv[3]) if len(sys.argv) > 3 else 0
-    os.environ.setdefault("SPARK_GRAFT_TIER", "production")
 
     import __spark_entry__ as se
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.session import (
@@ -101,7 +100,7 @@ def main() -> int:
             )
         )
 
-    print(f"# {name} samples={samples} (sf_dir={SF_DIR}, tier={os.environ['SPARK_GRAFT_TIER']})")
+    print(f"# {name} samples={samples} (sf_dir={SF_DIR})")
     for s in range(repeat):
         sjobs = [r for r in rows if r[0] == s]
         tot = sum(r[2] for r in sjobs)
