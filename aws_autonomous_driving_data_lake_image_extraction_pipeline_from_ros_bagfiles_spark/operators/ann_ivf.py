@@ -344,22 +344,14 @@ def _sq_dist_col(vec_col, cent_col):
 
 def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
     """(bucket, centroid) single-slice local frame from a centroid list
-    — the broadcast side of the table path. Memoized per (session,
-    centroid values): a DataFrame IS session-bound, so the key carries
-    the application id; the B-row local relation itself is plan
-    metadata (the values came in as an argument), so reuse saves only
-    the createDataFrame/parallelize driver round trips, never a compute
-    pass."""
-    key = ("cf", spark.sparkContext.applicationId, _cent_key(centroids))
-
-    def build():
-        rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            "bucket int, centroid array<double>",
-        )
-
-    return _expr_cached(key, build)
+    — the broadcast side of the table path. Built per call: a DataFrame
+    is session-bound, so it does not belong in the process-wide Column
+    memo, and a B-row build costs tens of milliseconds."""
+    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        "bucket int, centroid array<double>",
+    )
 
 
 def _table_argmin(

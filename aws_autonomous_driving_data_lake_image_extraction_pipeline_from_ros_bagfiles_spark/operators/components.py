@@ -179,24 +179,7 @@ def assign_clusters(
 #
 # q54/q157/q203/q205 all start from the SAME banded-minhash pair table
 # (threshold 0.2, stop-bucket capped) and three of them run the SAME
-# connected components over it. Computing that stage once per session and
-# serving the checkpointed result to every family member is exactly what a
-# production curation pipeline does (the pair table / cluster map is a
-# materialized intermediate, not a per-query recomputation). Keyed by
-# (applicationId, sf_dir, threshold, cap, kind); a CORPUS change — a
-# different (applicationId, sf_dir) prefix — clears the cache (one corpus
-# in flight at a time — same policy as graph_metrics._EDGE_CACHE).
-# Different kinds/thresholds for the SAME corpus coexist: the r12 k[:4]
-# predicate compared threshold/cap sentinels too, so any new kind's first
-# miss wiped every other kind's entry and the families rebuilt their
-# stages per consumer (ADVICE r12, medium).
-# bench.py annotates the family as shared-stage so whichever member runs
-# first is known to carry the stage cost.
-_FAMILY_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _family_key(spark, sf_dir: str, threshold: float, cap: int, kind: str):
-    return (spark.sparkContext.applicationId, sf_dir, threshold, cap, kind)
+# connected components over it, so both are session stages.
 
 
 def family_signatures(spark, sf_dir: str) -> DataFrame:
@@ -208,22 +191,19 @@ def family_signatures(spark, sf_dir: str) -> DataFrame:
     stored-signature-index contract the operators already document
     ("switching thresholds is a band-key recut, not a corpus pass").
     Consumers: both pair families below, q68/q87/q89/q172/q204."""
+    from ..plans.registry import audit_round, stage
     from ..tables import load
     from . import dedup as DD
 
-    key = _family_key(spark, sf_dir, 0.0, -2, "signatures")
-    if key not in _FAMILY_CACHE:
-        if any(k[:2] != key[:2] for k in _FAMILY_CACHE):
-            _FAMILY_CACHE.clear()
+    def build():
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", "text"
         ).repartition(spark.sparkContext.defaultParallelism)
-        from ..plans.registry import audit_round
-
         gen = DD.minhash_table(docs)
         audit_round("family_signatures:gen", gen)
-        _FAMILY_CACHE[key] = gen.localCheckpoint(eager=True)
-    return _FAMILY_CACHE[key]
+        return gen.localCheckpoint(eager=True)
+
+    return stage("family/signatures", spark, sf_dir, (), build)
 
 
 def family_default_bands(spark, sf_dir: str) -> DataFrame:
@@ -243,19 +223,15 @@ def family_pairs(
     """Session-memoized verified near-dup pair table (id_a, id_b) over
     ``documents`` — the q24-recipe banded generator, checkpointed so
     every family member (and the CC stage) reads stored blocks."""
+    from ..plans.registry import audit_round, stage
     from ..tables import load
     from . import dedup as DD
 
     cap = DD.DEFAULT_BUCKET_CAP if cap is None else cap
-    key = _family_key(spark, sf_dir, threshold, cap, "pairs")
-    if key not in _FAMILY_CACHE:
-        if any(k[:2] != key[:2] for k in _FAMILY_CACHE):
-            _FAMILY_CACHE.clear()
-        docs = load(spark, sf_dir, "documents")
-        from ..plans.registry import audit_round
 
+    def build():
         gen = DD.minhash_lsh_pairs(
-            docs,
+            load(spark, sf_dir, "documents"),
             threshold=threshold,
             max_bucket_size=cap,
             bands=family_default_bands(spark, sf_dir),
@@ -266,8 +242,9 @@ def family_pairs(
         audit_round("family_pairs:gen", gen)
         pairs = gen.localCheckpoint(eager=True)
         DD.release_caches()
-        _FAMILY_CACHE[key] = pairs
-    return _FAMILY_CACHE[key]
+        return pairs
+
+    return stage("family/pairs", spark, sf_dir, (threshold, cap), build)
 
 
 def family_pairs_uncapped(
@@ -278,29 +255,25 @@ def family_pairs_uncapped(
     reused by q91 (PageRank over the near-dup graph) and q201 (recall
     eval of the same banding). All three ran the identical banded-LSH +
     exact-Jaccard pipeline per query; the pair table is the natural
-    materialized intermediate (same policy as :func:`family_pairs`,
-    which serves the CAPPED 0.2 table to the q54 family — a different
-    result set, hence a separate cache kind)."""
+    materialized intermediate. :func:`family_pairs` serves the CAPPED
+    table to the q54 family — a different result set, hence a separate
+    stage kind."""
+    from ..plans.registry import audit_round, stage
     from ..tables import load
     from . import dedup as DD
 
-    key = _family_key(spark, sf_dir, threshold, -1, "pairs_uncapped")
-    if key not in _FAMILY_CACHE:
-        if any(k[:2] != key[:2] for k in _FAMILY_CACHE):
-            _FAMILY_CACHE.clear()
-        docs = load(spark, sf_dir, "documents")
-        from ..plans.registry import audit_round
-
+    def build():
         gen = DD.minhash_lsh_pairs(
-            docs,
+            load(spark, sf_dir, "documents"),
             threshold=threshold,
             bands=family_default_bands(spark, sf_dir),
         ).select("id_a", "id_b", "jaccard")
         audit_round("family_pairs_uncapped:gen", gen)
         pairs = gen.localCheckpoint(eager=True)
         DD.release_caches()
-        _FAMILY_CACHE[key] = pairs
-    return _FAMILY_CACHE[key]
+        return pairs
+
+    return stage("family/pairs_uncapped", spark, sf_dir, (threshold,), build)
 
 
 def family_components(
@@ -308,19 +281,14 @@ def family_components(
 ) -> DataFrame:
     """Session-memoized ``(node, cluster_id)`` components over
     :func:`family_pairs` — q54's exact output, reused by q157/q203."""
+    from ..plans.registry import audit_round, stage
     from . import dedup as DD
 
     cap = DD.DEFAULT_BUCKET_CAP if cap is None else cap
-    key = _family_key(spark, sf_dir, threshold, cap, "comp")
-    if key not in _FAMILY_CACHE:
-        if any(k[:2] != key[:2] for k in _FAMILY_CACHE):
-            _FAMILY_CACHE.clear()
-        from ..plans.registry import audit_round
 
-        comp0 = connected_components(
-            family_pairs(spark, sf_dir, threshold, cap)
-        )
-        audit_round("family_components:final_join", comp0)
-        comp = comp0.localCheckpoint(eager=True)
-        _FAMILY_CACHE[key] = comp
-    return _FAMILY_CACHE[key]
+    def build():
+        comp = connected_components(family_pairs(spark, sf_dir, threshold, cap))
+        audit_round("family_components:final_join", comp)
+        return comp.localCheckpoint(eager=True)
+
+    return stage("family/comp", spark, sf_dir, (threshold, cap), build)

@@ -33,13 +33,16 @@ def with_frame_ids(
 
 
 def with_frame_filenames(frames: DataFrame, topic_col: str = "topic", ts_col: str = "ts") -> DataFrame:
-    """Render the reference's PNG name: ``<topic>-<isotime>-<%04d>.png``
-    (K2: bagstream.py:251-252, ':' already mapped to '_')."""
+    """Render the reference's PNG name from the topic's last segment:
+    ``/camera_rear/image_raw`` -> ``image_raw-<isotime>-<%04d>.png``
+    (K2: bagstream.py:251-252, ':' already mapped to '_'; FIXTURES §B3).
+    The name stays relative: the camera directory comes from the sink's
+    per-topic subdirectory, not from the name."""
     return frames.withColumn(
         "img_file",
         F.format_string(
             "%s-%s-%04d.png",
-            F.col(topic_col),
+            F.substring_index(F.col(topic_col), "/", -1),
             iso_for_path(F.col(ts_col)),
             F.col("frame_id"),
         ),

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..tables import load
-from .registry import audit_round, materialize, register
+from .registry import audit_round, materialize, register, stage
 
 
 # --------------------------------------------------------------------------
@@ -1288,15 +1288,9 @@ def _q223_oracle() -> str:
     """
 
 
-# q223 and q226 train the IDENTICAL flat product quantizer (same corpus
-# projection, same M/KS/iters deterministic grouped Lloyd) — q226 is the
-# recall audit OF q223's index, so the (subvecs, codebooks, codes)
-# triple is one materialized intermediate, not a per-query recompute.
-# Session-memoized with the _FAMILY_CACHE policy (keyed by
-# (applicationId, sf_dir); key change clears); bench.py annotates both
-# consumers as shared-stage. q224's residual PQ trains on residuals —
-# a different input — and stays per-query.
-_PQ_CACHE: dict[tuple, tuple] = {}
+# q223 and q226 train the IDENTICAL flat product quantizer — q226 is the
+# recall audit OF q223's index — so it is one session stage. q224's
+# residual PQ trains on residuals, a different input, and stays per-query.
 
 
 def _flat_pq_stage(spark: SparkSession, sf_dir: str):
@@ -1306,10 +1300,7 @@ def _flat_pq_stage(spark: SparkSession, sf_dir: str):
     AND LUT; codes feed q223's scan and q226's ADC arm)."""
     from ..operators.ann_ivf import pq_encode, pq_subvectors, pq_train
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_CACHE:
-        if any(k != key for k in _PQ_CACHE):
-            _PQ_CACHE.clear()
+    def build():
         emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         ).repartition(spark.sparkContext.defaultParallelism)
@@ -1318,8 +1309,9 @@ def _flat_pq_stage(spark: SparkSession, sf_dir: str):
             pq_train(subvecs, Q223_KS, iters=Q223_ITERS)
         )
         codes = materialize(pq_encode(subvecs, codebooks))
-        _PQ_CACHE[key] = (subvecs, codebooks, codes)
-    return _PQ_CACHE[key]
+        return subvecs, codebooks, codes
+
+    return stage("pq/flat", spark, sf_dir, (), build)
 
 
 @register("q223_pq_adc_topk", oracle=_q223_oracle())

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import dot, norm
 from ..tables import load
-from .registry import register
+from .registry import audit_round, register, stage
 
 Q168_TAU = 0.3
 Q168_K = 8
@@ -126,19 +126,10 @@ def _mutual_knn_edges_sql() -> str:
     )"""
 
 
-# q168/q180/q229 all operate on the SAME mutual-kNN edge set (q180 and
-# q229 are documented as consuming q168's graph), yet each one re-ran the
-# LSH-blocked cosine verify + mutual-top-K construction — the single
-# most expensive stage of all three (the downstream triangle/wedge/LPA
-# work is cheap against the degree-bounded edge list). Compute the edge
-# stage once per session and serve the checkpointed result to every
-# consumer — the exact policy of operators/components.py::_FAMILY_CACHE
-# (q54/q157/q203/q205), which is what a production pipeline does with a
-# materialized similarity graph. Keyed by (applicationId, sf_dir); a key
-# change clears the cache (one corpus in flight at a time). bench.py
-# annotates the three consumers as shared-stage so whichever runs first
-# is known to carry the construction cost.
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
+# q168/q180/q229 all operate on the SAME mutual-kNN edge set, and q42 is
+# the raw verified edge set under it. Building those edges is the most
+# expensive stage of all four (the triangle/wedge/LPA work downstream is
+# cheap against the degree-bounded edge list), so both are session stages.
 
 
 def family_raw_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,31 +138,26 @@ def family_raw_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6dp) — q42's exact near-dup pair set AND the input of the
     mutual-kNN construction below. The LSH-candidate cosine verify is
     the expensive stage of both; computed once per session."""
-    key = (spark.sparkContext.applicationId, sf_dir, "raw")
-    if key not in _EDGE_CACHE:
-        if any(k[:2] != key[:2] for k in _EDGE_CACHE):
-            _EDGE_CACHE.clear()
+
+    def build():
         base = load(spark, sf_dir, "embeddings")
         n = base.count()  # footer-only job on the raw scan
         emb = base.repartition(spark.sparkContext.defaultParallelism)
         pre = _scaled_raw_edges(emb, n)
-        from .registry import audit_round
-
         audit_round("family_raw_edges:gen", pre)
-        _EDGE_CACHE[key] = pre.localCheckpoint(eager=True)
-    return _EDGE_CACHE[key]
+        return pre.localCheckpoint(eager=True)
+
+    return stage("edges/raw", spark, sf_dir, (), build)
 
 
 def family_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized mutual-kNN edge set (u < v) over ``embeddings`` —
     q168's exact graph, reused by q180/q229. The returned frame is an
     eager localCheckpoint (built inside :func:`_mutual_knn_edges`)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "mutual")
-    if key not in _EDGE_CACHE:
-        if any(k[:2] != key[:2] for k in _EDGE_CACHE):
-            _EDGE_CACHE.clear()
-        _EDGE_CACHE[key] = _mutual_knn_edges(family_raw_edges(spark, sf_dir))
-    return _EDGE_CACHE[key]
+    return stage(
+        "edges/mutual", spark, sf_dir, (),
+        lambda: _mutual_knn_edges(family_raw_edges(spark, sf_dir)),
+    )
 
 
 def _mutual_knn_edges(raw: DataFrame) -> DataFrame:
@@ -202,8 +188,6 @@ def _mutual_knn_edges(raw: DataFrame) -> DataFrame:
     # consumer's registry-level explain — capture it for the plan audit
     # (the family_pairs pattern; whichever consumer builds the shared
     # stage carries it)
-    from .registry import audit_round
-
     audit_round("mutual_knn_edges:gen", pre)
     edges = pre.localCheckpoint(eager=True)
     top.unpersist()

@@ -329,7 +329,7 @@ def q62_topic_schema_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.topic_views import PAYLOAD_SCHEMAS, image_view, topic_view
     from .pipeline import _demo_records
 
-    rec = _demo_records(spark)
+    rec = _demo_records(spark, sf_dir)
     # pass 1 — discovery: which (topic, msg_type) pairs exist (tiny result;
     # the reference discovers this lazily per connection)
     discovered = sorted(

@@ -23,30 +23,25 @@ from ..sources.rosbag import decode_bag_df
 from ..sources.rosbag_fixtures import build_demo_bag
 from ..sources.topic_views import image_view
 from ..tables import load
-from .registry import materialize, register
+from .registry import materialize, register, stage
 
 _DETECTION_VOCAB = ["Person", "Car", "Bicycle", "Truck", "Motorcycle"]
 
 
-_DEMO_CACHE: dict[str, DataFrame] = {}
+def _demo_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decoded demo-bag records, a session stage (registry.py::stage) —
+    q32, q33, q56 and q62 share one decode instead of spinning the
+    mapInPandas worker per query. The bag is synthesized, so ``sf_dir``
+    only scopes the stage to the query's corpus like every other stage."""
 
-
-def _demo_records(spark: SparkSession) -> DataFrame:
-    """Decoded demo-bag records, memoized per session — q32 and q33 share
-    one decode instead of spinning the mapInPandas worker twice.
-
-    Keyed by applicationId, which is unique per SparkContext — ``id(spark)``
-    could be reused by a new session after the old one is GC'd, handing out
-    a localCheckpointed DataFrame bound to a dead session."""
-    key = spark.sparkContext.applicationId
-    if key not in _DEMO_CACHE:
+    def build():
         blob = build_demo_bag(n_frames=8, bz2_chunk=True)
         bags = spark.createDataFrame(
             [("memory://demo-0.bag", bytearray(blob))], "path string, content binary"
         ).coalesce(1)  # one bag -> one task; don't fan 32 python workers for it
-        _DEMO_CACHE.clear()
-        _DEMO_CACHE[key] = decode_bag_df(bags).localCheckpoint(eager=True)
-    return _DEMO_CACHE[key]
+        return decode_bag_df(bags).localCheckpoint(eager=True)
+
+    return stage("demo", spark, sf_dir, (), build)
 
 
 # --------------------------------------------------------------------------
@@ -56,7 +51,7 @@ def _demo_records(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 @register("q32_bag_decode")
 def q32_bag_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rec = _demo_records(spark)
+    rec = _demo_records(spark, sf_dir)
     return (
         rec.groupBy("topic", "msg_type")
         .agg(
@@ -76,7 +71,7 @@ def q32_bag_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q33_frame_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.images import encode_frames_png
 
-    rec = _demo_records(spark)
+    rec = _demo_records(spark, sf_dir)
     frames = with_frame_filenames(with_frame_ids(image_view(rec), tiebreak="seq"))
     decoded = decode_frames(frames)
     pngs = encode_frames_png(decoded)
@@ -101,7 +96,7 @@ def q56_select_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.images import blur_regions, decode_frames
     from ..sources.topic_views import image_view as iv
 
-    frames = iv(_demo_records(spark))
+    frames = iv(_demo_records(spark, sf_dir))
     labeled = frames.select(
         "bag", "topic", "ts", "seq",
         F.when(

@@ -113,6 +113,12 @@ def write_png_files(
             for topic, name, pix, w, h in zip(
                 pdf["topic"], pdf[name_col], pdf["pixels"], pdf["img_width"], pdf["img_height"]
             ):
+                # a directory part would escape <root>/<topic>/
+                if os.path.basename(name) != name:
+                    raise ValueError(
+                        f"frame {name!r} ({topic}): {name_col} must be a"
+                        " bare file name, without a directory part"
+                    )
                 # input contract: decode_frames output (RGB-normalized,
                 # exactly w*h*3). A raw img_data buffer fed here would be
                 # SILENTLY truncated by the encoder (rgba -> scrambled

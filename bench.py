@@ -39,6 +39,15 @@ noise-window evidence.
 ``build_jobs`` maps each query to the number of Spark jobs each sample's
 builder call ran before its action (counted through a job group per
 call); the suite total is printed on stderr.
+
+``annotations`` maps each query that looked up a session stage (a pair
+table, edge set, PQ codebook or decoded bag shared by several queries;
+``plans/registry.py::stage``) to what its first sample did with it, read
+from the engine's stage log: ``built family/pairs(0.2,32) in 3.1 s`` when
+that sample paid for the stage, ``served family/pairs(0.2,32)`` when an
+earlier query had. A first sample that built a stage carries a one-time
+cost that its repeats and later consumers do not. A stage built inside
+another's build is listed first, and the outer build time includes it.
 """
 
 from __future__ import annotations
@@ -53,38 +62,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-# Per-query measurement caveats, copied into BENCH_DETAIL.json so a
-# committed snapshot is self-describing (VERDICT r8 #3: q32's 0.04 s
-# warm median was mistaken for decode cost). Two classes:
-#   memoized  — the query shares a session-memoized fixture/stage, so
-#               repeat samples (and any run after the first consumer)
-#               are warm; the FIRST sample carries the real cost.
-#   shared    — the query consumes a stage computed once per session for
-#               a family (cluster family's pair-gen + connected
-#               components); whichever family member runs first pays it.
-QUERY_ANNOTATIONS = {
-    "q32_bag_decode": "memoized: demo-bag decode cached per session; repeats are warm",
-    "q33_frame_table": "memoized: shares q32's decoded demo bag",
-    "q54_dedup_clusters": "shared: pair-gen+CC stage computed once per session for q54/q157/q203/q205",
-    "q157_cluster_representatives": "shared: reuses the q54-family pair-gen+CC stage",
-    "q203_cluster_aware_split": "shared: reuses the q54-family pair-gen+CC stage",
-    "q205_incremental_clusters": "shared: reuses the q54-family pair table (runs its own CC)",
-    "q68_minhash_lsh_capped": "shared: band keys recut from the session-shared minhash signature table",
-    "q87_salted_lsh": "shared: band keys recut from the session-shared minhash signature table",
-    "q89_persisted_lsh_index": "shared: persisted index built from the session-shared signature table",
-    "q172_split_leakage": "shared: capped 0.5 pair table computed once per session for q172/q197",
-    "q197_cross_source_dups": "shared: reuses the q172-family capped 0.5 pair table",
-    "q204_threshold_tuned_lsh": "shared: adaptive plans recut the session-shared signature table",
-    "q223_pq_adc_topk": "shared: flat-PQ train/encode stage computed once per session for q223/q226",
-    "q226_pq_recall_eval": "shared: reuses the q223 flat-PQ stage (runs its own truth tier)",
-    "q24_minhash_lsh": "shared: uncapped 0.2 pair table computed once per session for q24/q91/q201",
-    "q91_pagerank_neardup": "shared: reuses the q24-family uncapped pair table (runs its own PageRank)",
-    "q201_lsh_recall_eval": "shared: reuses the q24-family uncapped pair table (runs its own exact arm)",
-    "q42_embedding_neardup": "shared: raw verified edge stage computed once per session for q42/q168/q180/q229",
-    "q168_triangle_count": "shared: mutual-kNN edge stage computed once per session for q168/q180/q229",
-    "q180_link_prediction": "shared: reuses the q168-family mutual-kNN edge stage",
-    "q229_label_propagation": "shared: reuses the q168-family mutual-kNN edge stage",
-}
+def stage_notes(events: list[tuple[str, tuple, bool, float]]) -> str:
+    """One note per session stage a query looked up, in lookup order:
+    ``built <stage> in <s> s`` on a miss, ``served <stage>`` on a hit.
+    ``events`` is a slice of the engine's stage log (plans/registry.py
+    STAGE_LOG)."""
+    notes = []
+    for kind, params, hit, build_s in events:
+        name = f"{kind}({','.join(map(str, params))})" if params else kind
+        notes.append(f"served {name}" if hit else f"built {name} in {build_s:.1f} s")
+    return "; ".join(dict.fromkeys(notes))
+
 
 # Monotone-noise guard (VERDICT r8 #3): a co-tenant load ramp can land
 # ALL repeat samples inside one noise window — three monotone-increasing
@@ -139,6 +127,9 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_MASTER", f"local[{cpus}]")
 
     import __spark_entry__ as se
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.registry import (
+        STAGE_LOG,
+    )
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.session import (
         get_spark,
     )
@@ -178,10 +169,13 @@ def main() -> None:
     errors: dict[str, str] = {}
     # per query, one count per sample; read outside the timed region
     build_jobs: dict[str, list[int]] = {}
+    # per query, the stage lookups of its first (cold) sample
+    annotations: dict[str, str] = {}
     sc = spark.sparkContext
     for name, fn in sorted(queries.items()):
         runs = []
         groups: list[str] = []
+        mark = len(STAGE_LOG)
         try:
             for i in range(max(1, args.repeat)):
                 groups.append(f"bench-build-{name}-{i}")
@@ -193,6 +187,8 @@ def main() -> None:
                     sc.setLocalProperty("spark.jobGroup.id", None)
                 n = df.count()
                 runs.append(round(time.perf_counter() - t0, 3))
+                if i == 0 and len(STAGE_LOG) > mark:
+                    annotations[name] = stage_notes(STAGE_LOG[mark:])
             if args.repeat > 1 and monotone_noisy(runs):
                 # all samples rode one co-tenant load ramp — widen the
                 # sample set so the median can escape the noise window.
@@ -317,9 +313,7 @@ def main() -> None:
         "loadavg_start": loadavg_start,
         "loadavg_end": loadavg_end,
         "build_jobs": build_jobs,
-        "annotations": {
-            q: note for q, note in QUERY_ANNOTATIONS.items() if q in times
-        },
+        "annotations": annotations,
     }
     if args.repeat > 1:
         detail["samples"] = samples

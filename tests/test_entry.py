@@ -52,9 +52,25 @@ def test_functions_roundtrip(spark):
     assert out.iso_s == "2020-12-16T23_32_19.969307"
 
 
-def test_bench_annotations_name_registry_queries():
-    """Every QUERY_ANNOTATIONS key in bench.py must be a registry query;
-    a misspelled key never reaches its query's BENCH_DETAIL row."""
+def test_bench_annotations_come_from_the_run(spark, tmp_path):
+    """bench.py annotates a query from its cold sample's slice of the
+    stage log: q32 builds the decoded demo bag and q56 is served it."""
     import bench
 
-    assert set(bench.QUERY_ANNOTATIONS) <= set(se.queries())
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.registry import (
+        STAGE_LOG,
+        stage,
+    )
+
+    sf_dir = "/root/testdata/sf0.001"
+    # a lookup for another corpus evicts every stored stage
+    stage("probe", spark, str(tmp_path), (), object)
+    events = {}
+    for name in ("q32_bag_decode", "q56_select_anonymize"):
+        mark = len(STAGE_LOG)
+        se.queries()[name](spark, sf_dir).count()
+        events[name] = STAGE_LOG[mark:]
+    assert [e[:3] for e in events["q32_bag_decode"]] == [("demo", (), False)]
+    assert [e[:3] for e in events["q56_select_anonymize"]] == [("demo", (), True)]
+    assert bench.stage_notes(events["q32_bag_decode"]).startswith("built demo in ")
+    assert bench.stage_notes(events["q56_select_anonymize"]) == "served demo"

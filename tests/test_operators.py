@@ -645,29 +645,23 @@ def test_default_banding_never_floods(spark):
 
 
 def test_family_stage_cache_isolation(spark):
-    """The shared cluster-family stage must serve per-(sf_dir, params)
-    results: switching corpora clears the previous entry (single-corpus
-    policy) and the served components match a fresh uncached compute —
-    a stale cache here would silently cluster the WRONG corpus for
-    three registry queries."""
+    """The shared cluster-family stage must serve per-sf_dir results: a
+    repeat call serves the stored stage, another corpus gets its own,
+    and the served components match a fresh uncached compute — a stale
+    stage here would silently cluster the WRONG corpus for three
+    registry queries (eviction rules: test_stage_cache_rules)."""
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators import (
         components as C,
     )
 
-    C._FAMILY_CACHE.clear()
-    a1 = {
-        (r.node, r.cluster_id)
-        for r in C.family_components(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert C.family_components(spark, "/root/testdata/sf0.001") is C._FAMILY_CACHE[
-        C._family_key(spark, "/root/testdata/sf0.001", 0.2, 32, "comp")
-    ]  # second call serves the memo
+    a = C.family_components(spark, "/root/testdata/sf0.001")
+    a1 = {(r.node, r.cluster_id) for r in a.collect()}
+    # second call serves the stored stage
+    assert C.family_components(spark, "/root/testdata/sf0.001") is a
     b = {
         (r.node, r.cluster_id)
         for r in C.family_components(spark, "/root/testdata/sf0.01").collect()
     }
-    # corpus switch evicted the old key (single-corpus policy)
-    assert not any(k[1].endswith("sf0.001") for k in C._FAMILY_CACHE)
     assert b != a1
     # fresh uncached compute agrees with what the cache served
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators import (
@@ -682,7 +676,6 @@ def test_family_stage_cache_isolation(spark):
     fresh = {(r.node, r.cluster_id) for r in connected_components(pairs).collect()}
     DD.release_caches()
     assert fresh == b
-    C._FAMILY_CACHE.clear()
 
 
 def test_family_signature_band_parity(spark):
@@ -698,7 +691,6 @@ def test_family_signature_band_parity(spark):
     )
 
     sf = "/root/testdata/sf0.001"
-    C._FAMILY_CACHE.clear()
     shared = {
         (r.doc_id, r.band, r.band_key)
         for r in C.family_default_bands(spark, sf).collect()
@@ -717,36 +709,41 @@ def test_family_signature_band_parity(spark):
     }
     wide_fresh = {tuple(r) for r in DD.minhash_band_cols(docs).collect()}
     assert wide_shared == wide_fresh
-    C._FAMILY_CACHE.clear()
 
 
-def test_family_cache_kinds_coexist(spark):
-    """Different kinds/thresholds for the SAME corpus must coexist in
-    _FAMILY_CACHE: the r12 clear predicate compared threshold/cap
-    sentinels (k[:4]) too, so any new kind's first miss wiped every
-    other kind's entry and the shared stages rebuilt per consumer
-    (ADVICE r12, medium). Only a CORPUS switch (appId, sf_dir) clears."""
-    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators import (
-        components as C,
+def test_stage_cache_rules():
+    """registry.stage keeps one corpus per application in flight: every
+    (kind, params) of that corpus coexists (the r12 family cache's clear
+    predicate compared params too, so each new kind's first miss wiped
+    the others and shared stages rebuilt per consumer), while a corpus
+    switch or a new application id evicts everything."""
+    from types import SimpleNamespace
+
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.registry import (
+        STAGE_LOG,
+        stage,
     )
 
-    sf = "/root/testdata/sf0.001"
-    C._FAMILY_CACHE.clear()
-    sig = C.family_signatures(spark, sf)
-    sig_key = C._family_key(spark, sf, 0.0, -2, "signatures")
-    # interleave every other kind — each was a cache-clearing miss in r12
-    C.family_pairs_uncapped(spark, sf)
-    assert C._FAMILY_CACHE.get(sig_key) is sig
-    pairs = C.family_pairs(spark, sf)
-    assert C._FAMILY_CACHE.get(sig_key) is sig
-    C.family_components(spark, sf)
-    assert C._FAMILY_CACHE.get(sig_key) is sig
-    assert C._FAMILY_CACHE[C._family_key(spark, sf, 0.2, 32, "pairs")] is pairs
-    assert len(C._FAMILY_CACHE) == 4  # signatures, uncapped, pairs, comp
-    # corpus switch still evicts everything (single-corpus policy)
-    C.family_signatures(spark, "/root/testdata/sf0.01")
-    assert not any(k[1].endswith("sf0.001") for k in C._FAMILY_CACHE)
-    C._FAMILY_CACHE.clear()
+    def hit(app, sf_dir, kind, params=()):
+        spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+        value = stage(kind, spark, sf_dir, params, object)
+        assert STAGE_LOG[-1][:2] == (kind, params)
+        return STAGE_LOG[-1][2], value
+
+    lookups = [("pairs", (0.2, 32)), ("pairs", (0.5, 32)), ("comp", (0.2, 32)), ("sig", ())]
+    built = {}
+    for kind, params in lookups:
+        is_hit, built[kind, params] = hit("app-1", "/lake/a", kind, params)
+        assert not is_hit
+    # kinds and params of one corpus coexist, each served as built
+    for kind, params in lookups:
+        assert hit("app-1", "/lake/a", kind, params) == (True, built[kind, params])
+    # a corpus switch evicts
+    assert not hit("app-1", "/lake/b", "sig")[0]
+    assert not hit("app-1", "/lake/a", "sig")[0]
+    # a new application id evicts
+    assert not hit("app-2", "/lake/a", "sig")[0]
+    assert not hit("app-1", "/lake/a", "sig")[0]
 
 
 def test_stage_sliced_parquet_matches_per_slice_filters(spark, tmp_path):

@@ -137,6 +137,38 @@ def test_write_png_files_sink(spark, tmp_path):
         assert pix == src[seq]
 
 
+def test_write_png_files_stays_under_root(spark, tmp_path):
+    """A real ROS topic starts with '/' (/camera_rear/image_raw): the
+    rendered frame name must still land under <root>/<topic>/ in the
+    reference's image_raw-<iso>-<idx>.png form, and a name with a
+    directory part must fail instead of writing outside its directory."""
+    from pyspark.errors import PythonException
+
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.operators.frames import (
+        with_frame_filenames,
+        with_frame_ids,
+    )
+
+    frames = _decoded_frames(spark).select(
+        "bag",
+        F.lit("/camera_rear/image_raw").alias("topic"),
+        F.timestamp_seconds(F.col("seq") + 1608161539).alias("ts"),
+        "seq", "img_width", "img_height", "pixels",
+    )
+    named = with_frame_filenames(with_frame_ids(frames, tiebreak="seq"))
+    root = tmp_path / "root"
+    assert write_png_files(named, str(root)) == 3
+    written = sorted(p.relative_to(tmp_path).as_posix() for p in tmp_path.rglob("*.png"))
+    assert written == [
+        f"root/camera_rear_image_raw/image_raw-2020-12-16T23_32_{19 + i}.000000-000{i}.png"
+        for i in range(3)
+    ]
+    bad = named.withColumn("img_file", F.lit("../x.png"))
+    with pytest.raises(PythonException, match=r"ValueError: frame '\.\./x\.png'"):
+        write_png_files(bad, str(root))
+    assert not (root / "x.png").exists()
+
+
 def _reference_filter_scanlines(arr, bpp):
     """The int16 formulation the vectorized heuristic replaced; kept here
     as the byte-for-byte reference for the encoder's filter choice."""
