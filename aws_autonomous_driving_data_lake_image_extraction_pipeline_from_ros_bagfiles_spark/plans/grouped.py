@@ -216,20 +216,23 @@ def q55_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q52 — chunk-split bag decode (rows-only): the splittable reader driven as
-# a query — write the fixture bag to a temp file, layout-scan, decode with
-# one task per chunk, aggregate. Counts must match q32's sequential decode.
+# a query — write the fixture bag (with its top-level connection copies) to
+# a temp file, read it through format("rosbag") with one task per chunk,
+# aggregate. Counts must match q32, which reads the same messages from the
+# unindexed layout.
 # --------------------------------------------------------------------------
 @register("q52_bag_split_decode")
 def q52_bag_split_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..sources.bag_datasource import register_rosbag_source
     from ..sources.rosbag_fixtures import build_demo_bag
-    from ..sources.rosbag_split import read_bags_split
 
     work = tempfile.mkdtemp(prefix="bag_split_")
     try:
         path = os.path.join(work, "demo.bag")
         with open(path, "wb") as f:
             f.write(build_demo_bag(n_frames=8, top_level_connections=True))
-        rec = read_bags_split(spark, [path])
+        register_rosbag_source(spark)
+        rec = spark.read.format("rosbag").option("path", path).load()
         out = (
             rec.groupBy("topic", "msg_type")
             .agg(
@@ -251,9 +254,9 @@ def q52_bag_split_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expected output is a CONSTANT — the oracle hash-checks the pushdown
 # decode end-to-end: camera topic + frames 8..15 selects exactly 1 of 4
 # chunks from the op-6 chunk index (odd chunks have no camera messages,
-# chunk 0 is outside the time range); n_diff proves pushdown decode ==
-# full decode + DataFrame filter; chunks_selected/bytes skipped prove the
-# pruning really avoided I/O.
+# chunk 0 is outside the time range); n_diff proves the read with the
+# `topics`/`timerange` options == the full read + DataFrame filter;
+# chunks_selected proves the pruning really avoided I/O.
 # --------------------------------------------------------------------------
 @register(
     "q60_bag_topic_pushdown",
@@ -268,8 +271,9 @@ def q52_bag_split_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q60_bag_topic_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..sources.bag_datasource import register_rosbag_source
+    from ..sources.rosbag import plan_bag_splits
     from ..sources.rosbag_fixtures import build_indexed_bag, ros_time
-    from ..sources.rosbag_split import plan_bag_splits, read_bags_split
 
     cam = "/camera_front/image_raw"
     trange = (ros_time(1600000008, 8000), ros_time(1600000015, 15000))
@@ -279,15 +283,24 @@ def q60_bag_topic_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(path, "wb") as f:
             f.write(build_indexed_bag(n_frames=16, n_chunks=4))
         _, stats = plan_bag_splits([path], topics=[cam], time_range=trange)
-        pushed = read_bags_split(spark, [path], topics=[cam], time_range=trange)
-        sec = F.col("ros_time").bitwiseAND(F.lit(0xFFFFFFFF))
-        full_filtered = read_bags_split(spark, [path]).filter(
-            (F.col("topic") == cam) & sec.between(1600000008, 1600000015)
-        )
+        register_rosbag_source(spark)
         cmp_cols = ["topic", "msg_type", "ros_time", "seq"]
+        pushed = materialize(
+            spark.read.format("rosbag").option("path", path)
+            .option("topics", cam)
+            .option("timerange", f"{trange[0]}:{trange[1]}")
+            .load()
+            .select(cmp_cols)
+        )
+        # the full read is checkpointed before it is filtered, so the
+        # filter cannot be pushed back into the scan
+        sec = F.col("ros_time").bitwiseAND(F.lit(0xFFFFFFFF))
+        full_filtered = materialize(
+            spark.read.format("rosbag").option("path", path).load().select(cmp_cols)
+        ).filter((F.col("topic") == cam) & sec.between(1600000008, 1600000015))
         n_diff = (
-            pushed.select(cmp_cols).exceptAll(full_filtered.select(cmp_cols)).count()
-            + full_filtered.select(cmp_cols).exceptAll(pushed.select(cmp_cols)).count()
+            pushed.exceptAll(full_filtered).count()
+            + full_filtered.exceptAll(pushed).count()
         )
         out = (
             pushed.groupBy("topic")
@@ -382,8 +395,8 @@ def q62_topic_schema_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index and applies the filter exactly (the consumed filter leaves no
 # topic residual in the plan). Proof of pruning is external: the pushed
 # read plans 2 of 4 chunk partitions (camera lives only in even chunks of
-# the indexed fixture). n_diff checks the DataSource rows equal the
-# kwargs-driven split reader's rows. Constant oracle — the fixture is
+# the indexed fixture). n_diff checks the pushed rows equal the full
+# read's rows filtered after the scan. Constant oracle — the fixture is
 # deterministic (same pattern as q60/q62).
 # --------------------------------------------------------------------------
 @register(
@@ -401,7 +414,6 @@ def q62_topic_schema_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q69_bag_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.bag_datasource import register_rosbag_source
     from ..sources.rosbag_fixtures import build_indexed_bag
-    from ..sources.rosbag_split import read_bags_split
 
     cam = "/camera_front/image_raw"
     work = tempfile.mkdtemp(prefix="bag_dsv2_")
@@ -421,14 +433,14 @@ def q69_bag_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decode each side ONCE: the two exceptAll directions plus the
         # final aggregate would otherwise re-run the Python-DataSource
         # bag decode per consumer (3 scans of the pushed read, 2 of the
-        # split read — the decode is the whole cost of this fixture)
+        # full read — the decode is the whole cost of this fixture). The
+        # full read is filtered after its checkpoint, so the filter cannot
+        # be pushed back into its scan.
         pushed_rows = materialize(pushed.select(cmp_cols))
-        split_rows = materialize(
-            read_bags_split(spark, [path], topics=[cam]).select(cmp_cols)
-        )
+        full_rows = materialize(full.select(cmp_cols)).filter(F.col("topic") == cam)
         n_diff = (
-            pushed_rows.exceptAll(split_rows).count()
-            + split_rows.exceptAll(pushed_rows).count()
+            pushed_rows.exceptAll(full_rows).count()
+            + full_rows.exceptAll(pushed_rows).count()
         )
         sec = F.col("ros_time").bitwiseAND(F.lit(0xFFFFFFFF))
         out = (

@@ -10,6 +10,7 @@ plain batch aggregation); q36 is the 60/20/20 split (A8).
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 from ..operators.detections import detections_wide, explode_labels, stub_detector
 from ..operators.frames import with_frame_filenames, with_frame_ids
 from ..operators.images import decode_frames
-from ..sources.rosbag import decode_bag_df
+from ..sources.bag_datasource import register_rosbag_source
 from ..sources.rosbag_fixtures import build_demo_bag
 from ..sources.topic_views import image_view
 from ..tables import load
@@ -30,16 +31,23 @@ _DETECTION_VOCAB = ["Person", "Car", "Bicycle", "Truck", "Motorcycle"]
 
 def _demo_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decoded demo-bag records, a session stage (registry.py::stage) —
-    q32, q33, q56 and q62 share one decode instead of spinning the
-    mapInPandas worker per query. The bag is synthesized, so ``sf_dir``
-    only scopes the stage to the query's corpus like every other stage."""
+    q32, q33, q56 and q62 share one decode. The bag is synthesized, so
+    ``sf_dir`` only scopes the stage to the query's corpus like every
+    other stage. The fixture has no index region, so ``format("rosbag")``
+    takes its connections from inside the chunks and reads one partition
+    per chunk; the stage is checkpointed before its file is removed."""
 
     def build():
-        blob = build_demo_bag(n_frames=8, bz2_chunk=True)
-        bags = spark.createDataFrame(
-            [("memory://demo-0.bag", bytearray(blob))], "path string, content binary"
-        ).coalesce(1)  # one bag -> one task; don't fan 32 python workers for it
-        return decode_bag_df(bags).localCheckpoint(eager=True)
+        work = tempfile.mkdtemp(prefix="demo_bag_")
+        try:
+            path = os.path.join(work, "demo-0.bag")
+            with open(path, "wb") as f:
+                f.write(build_demo_bag(n_frames=8, bz2_chunk=True))
+            register_rosbag_source(spark)
+            rec = spark.read.format("rosbag").option("path", path).load()
+            return rec.localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
 
     return stage("demo", spark, sf_dir, (), build)
 

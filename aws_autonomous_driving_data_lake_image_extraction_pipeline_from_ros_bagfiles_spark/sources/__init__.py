@@ -1,5 +1,1 @@
-"""Sources: ROS-bag binary decoder + file-source helpers."""
-
-from .rosbag import BAG_RECORD_SCHEMA, decode_bag_bytes, read_bags
-
-__all__ = ["BAG_RECORD_SCHEMA", "decode_bag_bytes", "read_bags"]
+"""Sources: the ROS bag reader (``format("rosbag")``), sinks and topic views."""

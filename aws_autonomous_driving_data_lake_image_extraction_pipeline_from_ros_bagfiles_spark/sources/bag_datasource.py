@@ -1,17 +1,19 @@
-"""Spark 4 Python DataSource for ROS bag files — ``spark.read.format("rosbag")``.
+"""Spark 4 Python DataSource for ROS bag files — ``spark.read.format("rosbag")``
+and ``spark.readStream.format("rosbag")``, the one way a bag is read.
 
-ROADMAP #4's endgame: the chunk-split reader (``rosbag_split``) re-hosted
-behind Spark's DataSource API so the PLANNER drives predicate pushdown,
-not a Python keyword argument. ``df.filter(col("topic") == t)`` reaches
-:meth:`BagDataSourceReader.pushFilters`, which prunes whole chunks through
-the bag's own op-6 chunk index (reference: these records are skipped as
-process_unknown, bagstream.py:364-371; the unused ``topics_to_extract``
-env intent is ecs_stack.py:180,308) and then applies the filter EXACTLY
-per message, so the consumed filter never reaches Spark as residual.
+The chunk-split reader (:mod:`rosbag`) behind Spark's DataSource API, so
+the PLANNER drives predicate pushdown. ``df.filter(col("topic") == t)``
+reaches :meth:`BagDataSourceReader.pushFilters`, which prunes whole chunks
+through the bag's own op-6 chunk index (reference: these records are
+skipped as process_unknown, bagstream.py:364-371; the unused
+``topics_to_extract`` env intent is ecs_stack.py:180,308) and then applies
+the filter EXACTLY per message, so the consumed filter never reaches Spark
+as residual.
 
-Split planning (one :class:`InputPartition` per surviving chunk) reuses
+Split planning (one :class:`InputPartition` per surviving chunk) is
 ``plan_bag_splits`` — a pruned read is visible externally as fewer RDD
 partitions, which is what q69 and tests/test_bag_datasource.py assert.
+Batch and stream decode a split through the same :func:`_read_split`.
 
 A reader that declares pushFilters fails every batch read with
 ``DATA_SOURCE_PUSHDOWN_DISABLED`` unless
@@ -31,7 +33,6 @@ cannot soundly prune chunks whose index carries time-ordered bounds.
 from __future__ import annotations
 
 import glob
-import json
 import os
 from collections.abc import Iterator, Sequence
 
@@ -45,8 +46,14 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .rosbag import BAG_RECORD_SCHEMA, _RECORD_COLUMNS
-from .rosbag_split import _decode_chunk, plan_bag_splits
+from .rosbag import BAG_RECORD_SCHEMA, _decode_chunk, plan_bag_splits
+
+
+def _read_split(partition: InputPartition, time_range: tuple[int, int] | None) -> Iterator[tuple]:
+    """One planned split -> its record rows; ``None`` is Spark's stand-in
+    for an empty plan."""
+    if partition.value is not None:
+        yield from _decode_chunk(*partition.value, time_range)
 
 
 class BagDataSourceReader(DataSourceReader):
@@ -104,12 +111,7 @@ class BagDataSourceReader(DataSourceReader):
         return [InputPartition(s) for s in splits] or [InputPartition(None)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        if partition is None or partition.value is None:
-            return
-        path, off, ln, comp, conn_json = partition.value
-        conns = {int(k): v for k, v in json.loads(conn_json).items()}
-        for rec in _decode_chunk(path, int(off), int(ln), comp, conns, self._time_range):
-            yield tuple(rec[c] for c in _RECORD_COLUMNS)
+        return _read_split(partition, self._time_range)
 
 
 class BagStreamReader(DataSourceStreamReader):
@@ -166,12 +168,7 @@ class BagStreamReader(DataSourceStreamReader):
         return [InputPartition(s) for s in splits] or [InputPartition(None)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        if partition is None or partition.value is None:
-            return
-        path, off, ln, comp, conn_json = partition.value
-        conns = {int(k): v for k, v in json.loads(conn_json).items()}
-        for rec in _decode_chunk(path, int(off), int(ln), comp, conns, None):
-            yield tuple(rec[c] for c in _RECORD_COLUMNS)
+        return _read_split(partition, None)
 
     def commit(self, end: dict) -> None:
         pass  # landing zone is the source of truth; nothing to release

@@ -150,8 +150,9 @@ def build_demo_bag(
     loose records, exercising every decoder path.
 
     ``top_level_connections`` additionally writes the connection records
-    in the index region after the chunks (the standard bag layout), which
-    is what makes the bag chunk-split-readable (rosbag_split).
+    in the index region after the chunks (the standard bag layout), so the
+    layout scan finds them without decompressing a chunk; without them the
+    bag is the unindexed layout of a recording stopped before its index.
     """
     conns = (
         connection(0, "/camera_front/image_raw", "sensor_msgs/Image")

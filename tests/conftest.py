@@ -21,3 +21,22 @@ def spark():
     s = get_spark("pytest", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def read_bag(spark, tmp_path):
+    """``read_bag(blob, name="demo.bag", **options)``: write bag bytes to
+    ``tmp_path / name`` and read them with ``format("rosbag")``."""
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.bag_datasource import (
+        register_rosbag_source,
+    )
+
+    def read(blob: bytes, name: str = "demo.bag", **options):
+        (tmp_path / name).write_bytes(blob)
+        register_rosbag_source(spark)
+        reader = spark.read.format("rosbag").option("path", str(tmp_path / name))
+        for key, value in options.items():
+            reader = reader.option(key, value)
+        return reader.load()
+
+    return read

@@ -1,6 +1,10 @@
-"""Decoder unit tests against synthesized bag byte streams (SURVEY §5.2):
-record framing, connection registry, bz2 chunk path, typed payloads,
-and the 8UC3 BGR->RGB swizzle."""
+"""Decoder tests against synthesized bag byte streams (SURVEY §5.2), read
+through ``format("rosbag")``: record framing, connection registry, bz2
+chunk path, typed payloads, named errors on corrupt bags, and the 8UC3
+BGR->RGB swizzle."""
+
+import json
+import struct
 
 import numpy as np
 import pytest
@@ -14,41 +18,36 @@ from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfile
     rosbag_fixtures as fx,
 )
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.rosbag import (
-    decode_bag_bytes,
-    decode_bag_df,
+    scan_bag_layout,
 )
 
 
-def test_version_gate():
-    with pytest.raises(ValueError, match="unsupported bag version"):
-        list(decode_bag_bytes("x.bag", b"#ROSBAG V1.2\nwhatever"))
+def test_version_gate(read_bag):
+    with pytest.raises(Exception, match="unsupported bag version"):
+        read_bag(b"#ROSBAG V1.2\nwhatever").count()
 
 
-def test_decode_all_topics_and_chunks():
-    blob = fx.build_demo_bag(n_frames=8, bz2_chunk=True)
-    rows = list(decode_bag_bytes("demo.bag", blob))
+def test_decode_all_topics_and_chunks(read_bag):
+    rows = read_bag(fx.build_demo_bag(n_frames=8, bz2_chunk=True)).collect()
     by_topic = {}
     for r in rows:
-        by_topic.setdefault(r["topic"], []).append(r)
+        by_topic.setdefault(r.topic, []).append(r)
     assert set(by_topic) == {"/camera_front/image_raw", "/odom", "/scan", "/status"}
     # every topic got all 8 messages -> the bz2 chunk was decoded too
     assert all(len(v) == 8 for v in by_topic.values())
 
 
-def test_message_payloads():
-    blob = fx.build_demo_bag(n_frames=2, bz2_chunk=False)
-    rows = list(decode_bag_bytes("demo.bag", blob))
-    odo = [r for r in rows if r["topic"] == "/odom"][1]
-    import json
-
-    p = json.loads(odo["payload_json"])
+def test_message_payloads(read_bag):
+    rows = read_bag(fx.build_demo_bag(n_frames=2, bz2_chunk=False)).orderBy("ros_time").collect()
+    odo = [r for r in rows if r.topic == "/odom"][1]
+    p = json.loads(odo.payload_json)
     assert p["pos_x"] == 1.0 and p["pos_y"] == 2.0 and p["lin_x"] == pytest.approx(0.1)
     assert "ang_x" not in p and "cov" not in str(p)  # P8 projection drops them
-    img = [r for r in rows if r["topic"].endswith("image_raw")][0]
-    assert img["img_width"] == 8 and img["img_height"] == 6
-    assert len(img["img_data"]) == 8 * 6 * 3
-    status = [r for r in rows if r["topic"] == "/status"][0]
-    assert json.loads(status["payload_json"])["data"] == "status-0"
+    img = [r for r in rows if r.topic.endswith("image_raw")][0]
+    assert img.img_width == 8 and img.img_height == 6
+    assert bytes(img.img_data) == bytes((k * 7) % 256 for k in range(8 * 6 * 3))
+    status = [r for r in rows if r.topic == "/status"][0]
+    assert json.loads(status.payload_json)["data"] == "status-0"
 
 
 def test_ros_time_roundtrip_packing():
@@ -57,17 +56,13 @@ def test_ros_time_roundtrip_packing():
     assert (t >> 32) // 1000 == 456789
 
 
-def test_spark_decode_and_typed_views(spark):
+def test_spark_decode_and_typed_views(read_bag):
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.topic_views import (
         image_view,
         topic_view,
     )
 
-    blob = fx.build_demo_bag(n_frames=4)
-    bags = spark.createDataFrame(
-        [("memory://a.bag", bytearray(blob))], "path string, content binary"
-    )
-    rec = decode_bag_df(bags)
+    rec = read_bag(fx.build_demo_bag(n_frames=4))
     odo = topic_view(rec, "nav_msgs/Odometry")
     rows = odo.orderBy("seq").collect()
     assert len(rows) == 4 and rows[2].pos_x == 2.0
@@ -115,48 +110,48 @@ def test_std_msgs_int_decoding():
     assert decode_message("std_msgs/Int32", struct.pack("<i", -70000))["payload"]["data"] == -70000
 
 
-def test_corrupt_bag_strict_and_permissive(spark):
-    """Truncated/garbage bags: strict mode raises a named error; permissive
-    mode skips the bad bag and decodes the good ones."""
-    import pytest as _pytest
+def _corrupt(blob: bytes, offset: int, junk: bytes) -> bytes:
+    return blob[:offset] + junk + blob[offset + len(junk) :]
 
+
+def test_corrupt_bag_names_the_file(read_bag, tmp_path):
+    """A truncated or garbage bag fails planning with an error naming the
+    file; a corrupt chunk in a well-indexed bag (the layout scan never
+    opens it) fails the decode task with an error naming the file and the
+    chunk's offset, not a bare OSError/ValueError from bz2 or the framing."""
     good = fx.build_demo_bag(n_frames=2, bz2_chunk=False)
-    truncated = good[: len(good) // 2]
-    garbage = b"#ROSBAG V2.0\n" + b"\x99" * 40
+    with pytest.raises(Exception, match="corrupt bag layout in .*trunc.bag"):
+        read_bag(good[: len(good) // 2], "trunc.bag").count()
+    with pytest.raises(Exception, match="corrupt bag layout in .*junk.bag"):
+        read_bag(b"#ROSBAG V2.0\n" + b"\x99" * 40, "junk.bag").count()
 
-    with _pytest.raises(ValueError, match="corrupt bag record stream in trunc.bag"):
-        list(decode_bag_bytes("trunc.bag", truncated))
-
-    bags = spark.createDataFrame(
-        [("m://good.bag", bytearray(good)),
-         ("m://trunc.bag", bytearray(truncated)),
-         ("m://junk.bag", bytearray(garbage))],
-        "path string, content binary",
-    ).coalesce(1)
-    ok = decode_bag_df(bags, permissive=True)
-    rows = ok.collect()
-    assert len(rows) == 8  # only the good bag's 4 topics x 2 frames
-    assert {r.bag for r in rows} == {"m://good.bag"}
-    with _pytest.raises(Exception):
-        decode_bag_df(bags, permissive=False).collect()
+    indexed = fx.build_indexed_bag(n_frames=4, n_chunks=2)
+    (tmp_path / "layout.bag").write_bytes(indexed)
+    plain, bz2_chunk = scan_bag_layout(str(tmp_path / "layout.bag")).chunks
+    assert (plain.compression, bz2_chunk.compression) == ("none", "bz2")
+    cases = {
+        # 16 garbage bytes inside the bz2 stream
+        "badbz2.bag": (bz2_chunk, _corrupt(indexed, bz2_chunk.data_offset + 4, b"\x5a" * 16)),
+        # the first inner record's header length points past the chunk
+        "badhdr.bag": (plain, _corrupt(indexed, plain.data_offset, struct.pack("<I", 0x7FFFFFF0))),
+    }
+    for name, (extent, blob) in cases.items():
+        with pytest.raises(Exception, match=f"corrupt bag chunk in .*{name} at {extent.data_offset}"):
+            read_bag(blob, name).collect()
 
 
 def test_truncated_payload_length_prefix_raises():
     """A message payload whose u32 length prefix overruns the buffer is
     corruption, not a short read: the reader must raise (r8 review — the
-    old slice silently returned the short remainder, escaping both the
-    named-error contract and permissive mode)."""
-    import struct
-
-    import pytest as _pytest
-
+    old slice silently returned the short remainder, escaping the
+    named-error contract)."""
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.ros_messages import (
         decode_message,
     )
 
     # a String payload claiming 100 bytes with only 3 present
     bad = struct.pack("<I", 100) + b"abc"
-    with _pytest.raises(ValueError, match="overruns payload"):
+    with pytest.raises(ValueError, match="overruns payload"):
         decode_message("std_msgs/String", bad)
 
     # an Image whose img_data length field overruns: header + dims +
@@ -170,5 +165,5 @@ def test_truncated_payload_length_prefix_raises():
         + struct.pack("<I", 999)                    # img_data length LIE
         + b"\x01" * 10
     )
-    with _pytest.raises(ValueError, match="overruns payload"):
+    with pytest.raises(ValueError, match="overruns payload"):
         decode_message("sensor_msgs/Image", payload)

@@ -15,25 +15,19 @@ from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfile
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources import (
     rosbag_fixtures as fx,
 )
-from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.rosbag import (
-    decode_bag_df,
-)
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.topic_views import (
     image_view,
 )
 
 
-def test_ep3_select_anonymize(spark):
+def test_ep3_select_anonymize(spark, read_bag):
     """EP3 (select-labelling-imgs): VRU gate -> blur -> curated write.
 
     The VRU predicate keeps only frames whose labels hit the
     person/wheeler sets (P6); qualifying frames get their boxes blurred
     (F20) and land in the curated zone.
     """
-    bags = spark.createDataFrame(
-        [("m://a.bag", bytearray(fx.build_demo_bag(4)))], "path string, content binary"
-    ).coalesce(1)
-    frames = image_view(decode_bag_df(bags))
+    frames = image_view(read_bag(fx.build_demo_bag(4)))
     # stub label docs: frames with even seq contain a Person instance
     labeled = frames.withColumn(
         "annotations",

@@ -16,9 +16,6 @@ from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfile
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources import (
     rosbag_fixtures as fx,
 )
-from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.rosbag import (
-    decode_bag_df,
-)
 from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.sources.sinks import (
     write_detections,
     write_topic_tables,
@@ -28,18 +25,10 @@ from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfile
 )
 
 
-def _records(spark, n=4):
-    blob = fx.build_demo_bag(n_frames=n)
-    bags = spark.createDataFrame(
-        [("memory://a.bag", bytearray(blob))], "path string, content binary"
-    ).coalesce(1)
-    return decode_bag_df(bags)
-
-
-def test_topic_partitioned_write_prunes(spark):
+def test_topic_partitioned_write_prunes(spark, read_bag):
     work = tempfile.mkdtemp(prefix="t_sink_")
     try:
-        write_topic_tables(_records(spark), f"{work}/topics")
+        write_topic_tables(read_bag(fx.build_demo_bag(n_frames=4)), f"{work}/topics")
         back = spark.read.parquet(f"{work}/topics")
         assert back.count() == 16
         one = back.filter(F.col("topic") == "/odom")
@@ -51,10 +40,10 @@ def test_topic_partitioned_write_prunes(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_detector_contract_end_to_end(spark):
+def test_detector_contract_end_to_end(spark, read_bag):
     """EP2 with the pluggable batched predictor: frames -> detect ->
     explode -> wide table."""
-    frames = image_view(_records(spark))
+    frames = image_view(read_bag(fx.build_demo_bag(n_frames=4)))
     labeled = detect(frames, deterministic_stub_predictor)
     long_df = explode_labels(
         labeled.select(F.date_format("ts", "yyyy-MM-dd").alias("ts_key"),
@@ -89,14 +78,14 @@ def test_detections_dynamic_partition_overwrite(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_topic_csv_sink_drops_binary(spark):
+def test_topic_csv_sink_drops_binary(spark, read_bag):
     """K1 CSV branch: per-topic CSV write mirrors the reference (images
     routed to the frame sink, not the topic CSV)."""
     import tempfile
 
     work = tempfile.mkdtemp(prefix="t_csv_")
     try:
-        write_topic_tables(_records(spark), f"{work}/csv", fmt="csv")
+        write_topic_tables(read_bag(fx.build_demo_bag(n_frames=4)), f"{work}/csv", fmt="csv")
         back = spark.read.option("header", True).csv(f"{work}/csv")
         assert "img_data" not in back.columns
         assert back.count() == 16

@@ -73,6 +73,9 @@ def frame_digest(cols: list[str], rows: list[tuple]) -> tuple[int, str, str]:
 
 
 def main() -> int:
+    # one line per query as it finishes, also when stdout is a file: a
+    # sweep that dies mid-run must leave every verdict it reached
+    sys.stdout.reconfigure(line_buffering=True)
     import duckdb
 
     import __spark_entry__ as se
