@@ -40,6 +40,13 @@ noise-window evidence.
 builder call ran before its action (counted through a job group per
 call); the suite total is printed on stderr.
 
+``codegen_compiles`` maps each query to the number of generated classes
+each sample compiled (Spark's ``CodegenMetrics`` compilation count, read
+before and after the sample, outside its timed region); the suite total
+is printed on stderr. Warm samples that keep compiling show a query whose
+generated code changes from run to run, or a codegen cache too small for
+the suite.
+
 ``annotations`` maps each query that looked up a session stage (a pair
 table, edge set, PQ codebook or decoded bag shared by several queries;
 ``plans/registry.py::stage``) to what its first sample did with it, read
@@ -169,15 +176,21 @@ def main() -> None:
     errors: dict[str, str] = {}
     # per query, one count per sample; read outside the timed region
     build_jobs: dict[str, list[int]] = {}
+    # per query, generated classes compiled per sample; read outside the
+    # timed region from Spark's JVM-wide codegen metrics
+    codegen_compiles: dict[str, list[int]] = {}
     # per query, the stage lookups of its first (cold) sample
     annotations: dict[str, str] = {}
     sc = spark.sparkContext
+    compile_count = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for name, fn in sorted(queries.items()):
         runs = []
         groups: list[str] = []
+        compiles: list[int] = []
         mark = len(STAGE_LOG)
         try:
             for i in range(max(1, args.repeat)):
+                compiled_before = compile_count.getCount()
                 groups.append(f"bench-build-{name}-{i}")
                 sc.setJobGroup(groups[-1], name)
                 t0 = time.perf_counter()
@@ -187,6 +200,7 @@ def main() -> None:
                     sc.setLocalProperty("spark.jobGroup.id", None)
                 n = df.count()
                 runs.append(round(time.perf_counter() - t0, 3))
+                compiles.append(compile_count.getCount() - compiled_before)
                 if i == 0 and len(STAGE_LOG) > mark:
                     annotations[name] = stage_notes(STAGE_LOG[mark:])
             if args.repeat > 1 and monotone_noisy(runs):
@@ -223,6 +237,7 @@ def main() -> None:
             build_jobs[name] = [
                 len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups
             ]
+            codegen_compiles[name] = compiles
         samples[name] = runs
         firsts[name] = runs[0]
         times[name] = round(statistics.median(runs), 3)
@@ -299,6 +314,11 @@ def main() -> None:
         f" ({sum(v[0] for v in build_jobs.values() if v)} in first samples)",
         file=sys.stderr,
     )
+    print(
+        f"# codegen compiles: {sum(map(sum, codegen_compiles.values()))}"
+        f" ({sum(v[0] for v in codegen_compiles.values() if v)} in first samples)",
+        file=sys.stderr,
+    )
     loadavg_end = [round(x, 2) for x in os.getloadavg()]
     detail = {
         "metric": "total_query_sec",
@@ -313,6 +333,7 @@ def main() -> None:
         "loadavg_start": loadavg_start,
         "loadavg_end": loadavg_end,
         "build_jobs": build_jobs,
+        "codegen_compiles": codegen_compiles,
         "annotations": annotations,
     }
     if args.repeat > 1:
