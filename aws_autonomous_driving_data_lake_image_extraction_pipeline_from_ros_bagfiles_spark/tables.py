@@ -30,11 +30,20 @@ relation with fresh attribute ids, so plans, pushdown and pruning are the
 same as an inferring read, and a builder that loads one table twice or
 joins it to itself needs no aliasing. A shared DataFrame handle measured
 no faster than the schema memo, and it would need that aliasing.
+
+Version record. The registry's plan cache (``plans/registry.py``) serves a
+stored plan only while the inputs its build read are unchanged.
+:func:`recording_reads` collects the version of every table file read
+inside a block, :func:`reads_unchanged` re-checks such a record, and
+:func:`bucketed_version` names the bucketed routing together with the
+write generation of the bucketed tables.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +84,14 @@ _BUCKETED: dict[tuple[str, str, str], str] = {}
 _SCHEMAS: dict[tuple[str, str, int, int, str], StructType] = {}
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Bumped on every write and drop of a bucketed table: a dropped and
+# re-materialized table keeps its app-scoped name, so the routing alone
+# cannot tell its two versions apart.
+_BUCKETED_WRITES = 0
+
+# Open recording_reads() blocks, innermost last.
+_RECORDERS: list[dict[str, tuple[str, int, int]]] = []
 
 
 # The fact tables worth bucketing and their join keys.
@@ -123,6 +140,7 @@ def materialize_bucketed(
     cost is paid once at ingest, not per query, which is the point at
     100 TB. Returns {table: catalog_name}.
     """
+    global _BUCKETED_WRITES
     specs = specs or DEFAULT_BUCKET_SPECS
     buckets = buckets or spark.sparkContext.defaultParallelism
     app = spark.sparkContext.applicationId
@@ -144,6 +162,7 @@ def materialize_bucketed(
                 .sortBy(key)
                 .saveAsTable(tbl)
             )
+            _BUCKETED_WRITES += 1
         _BUCKETED[(app, sf_dir, name)] = tbl
         out[name] = tbl
     return out
@@ -167,9 +186,45 @@ def deregister_bucketed(spark: SparkSession, sf_dir: str, names) -> None:
 
 def drop_bucketed(spark: SparkSession, sf_dir: str) -> None:
     """Deregister + drop this sf_dir's bucketed tables (test/bench cleanup)."""
+    global _BUCKETED_WRITES
     app = spark.sparkContext.applicationId
     for (a, d, name) in [k for k in _BUCKETED if k[0] == app and k[1] == sf_dir]:
         spark.sql(f"DROP TABLE IF EXISTS {_BUCKETED.pop((a, d, name))}")
+        _BUCKETED_WRITES += 1
+
+
+def bucketed_version() -> tuple:
+    """The bucketed routing load() follows, with the write generation of
+    the tables it routes to. Equal versions route every load to the same
+    data."""
+    return _BUCKETED_WRITES, frozenset(_BUCKETED.items())
+
+
+@contextmanager
+def recording_reads() -> Iterator[dict[str, tuple[str, int, int]]]:
+    """Collect, for every table file read through this module inside the
+    block, ``table_path -> (realpath, size, mtime_ns)``. Blocks nest; an
+    outer block also records what an inner one read."""
+    reads: dict[str, tuple[str, int, int]] = {}
+    _RECORDERS.append(reads)
+    try:
+        yield reads
+    finally:
+        _RECORDERS.pop()
+
+
+def reads_unchanged(reads: dict[str, tuple[str, int, int]]) -> bool:
+    """Whether every file in a :func:`recording_reads` record still
+    resolves to the same path with the same size and mtime."""
+    for given, version in reads.items():
+        try:
+            path = os.path.realpath(given)
+            st = os.stat(path)
+        except OSError:
+            return False
+        if (path, st.st_size, st.st_mtime_ns) != version:
+            return False
+    return True
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -213,8 +268,11 @@ def _memo_schema(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, Stru
         # exist until Spark grows a reader option; documented here and in
         # the verify skill.
         spark.conf.set(_NANOS_AS_LONG, "true")
-    path = os.path.realpath(table_path(sf_dir, name))
+    given = table_path(sf_dir, name)
+    path = os.path.realpath(given)
     st = os.stat(path)
+    for reads in _RECORDERS:
+        reads[given] = (path, st.st_size, st.st_mtime_ns)
     app = spark.sparkContext.applicationId
     key = (app, path, st.st_size, st.st_mtime_ns, spark.conf.get(_NANOS_AS_LONG, "false"))
     schema = _SCHEMAS.get(key)

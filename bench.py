@@ -47,6 +47,12 @@ is printed on stderr. Warm samples that keep compiling show a query whose
 generated code changes from run to run, or a codegen cache too small for
 the suite.
 
+``plan_served`` maps each query to one bool per sample: whether the
+registry's session plan cache served that sample's plan instead of
+running its builder (``plans/registry.py``). On stderr the suite totals
+count the samples served, stored, and not cacheable with the reason: the
+build ran Spark jobs, or the plan evaluates Python.
+
 ``annotations`` maps each query that looked up a session stage (a pair
 table, edge set, PQ codebook or decoded bag shared by several queries;
 ``plans/registry.py::stage``) to what its first sample did with it, read
@@ -60,6 +66,7 @@ another's build is listed first, and the outer build time includes it.
 from __future__ import annotations
 
 import argparse
+import collections
 import json
 import os
 import statistics
@@ -135,6 +142,7 @@ def main() -> None:
 
     import __spark_entry__ as se
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.registry import (
+        PLAN_LOG,
         STAGE_LOG,
     )
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.session import (
@@ -179,6 +187,10 @@ def main() -> None:
     # per query, generated classes compiled per sample; read outside the
     # timed region from Spark's JVM-wide codegen metrics
     codegen_compiles: dict[str, list[int]] = {}
+    # per query, whether each sample was served from the plan cache; and
+    # the suite's plan-cache outcomes
+    plan_served: dict[str, list[bool]] = {}
+    plan_outcomes: collections.Counter[str] = collections.Counter()
     # per query, the stage lookups of its first (cold) sample
     annotations: dict[str, str] = {}
     sc = spark.sparkContext
@@ -187,6 +199,7 @@ def main() -> None:
         runs = []
         groups: list[str] = []
         compiles: list[int] = []
+        served: list[bool] = []
         mark = len(STAGE_LOG)
         try:
             for i in range(max(1, args.repeat)):
@@ -198,6 +211,9 @@ def main() -> None:
                     df = fn(spark, sf_dir)
                 finally:
                     sc.setLocalProperty("spark.jobGroup.id", None)
+                outcome = PLAN_LOG[-1][1]
+                plan_outcomes[outcome] += 1
+                served.append(outcome == "served")
                 n = df.count()
                 runs.append(round(time.perf_counter() - t0, 3))
                 compiles.append(compile_count.getCount() - compiled_before)
@@ -238,6 +254,7 @@ def main() -> None:
                 len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups
             ]
             codegen_compiles[name] = compiles
+            plan_served[name] = served
         samples[name] = runs
         firsts[name] = runs[0]
         times[name] = round(statistics.median(runs), 3)
@@ -319,6 +336,12 @@ def main() -> None:
         f" ({sum(v[0] for v in codegen_compiles.values() if v)} in first samples)",
         file=sys.stderr,
     )
+    print(
+        f"# plan cache: {plan_outcomes['served']} served, {plan_outcomes['stored']} stored;"
+        f" not cacheable: {plan_outcomes['jobs']} (jobs in build),"
+        f" {plan_outcomes['python']} (Python evaluation)",
+        file=sys.stderr,
+    )
     loadavg_end = [round(x, 2) for x in os.getloadavg()]
     detail = {
         "metric": "total_query_sec",
@@ -334,6 +357,7 @@ def main() -> None:
         "loadavg_end": loadavg_end,
         "build_jobs": build_jobs,
         "codegen_compiles": codegen_compiles,
+        "plan_served": plan_served,
         "annotations": annotations,
     }
     if args.repeat > 1:

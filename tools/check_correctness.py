@@ -13,6 +13,13 @@ Usage: python tools/check_correctness.py [query ...]
 correctness-at-scale sweep: the registry queries and their oracles are
 SF-agnostic by contract (both sides read whatever the table views hold),
 so the same hash compare must stay green at any SF.
+
+The gate also certifies the registry's session plan cache
+(``plans/registry.py``): when a query's first build was stored, the query
+is built a second time, and when that build is served from the cache its
+digest must equal the first run's (`` served[=]`` on its line; a
+differing digest fails the query). The last line counts the served
+queries.
 """
 
 from __future__ import annotations
@@ -79,6 +86,9 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as se
+    from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.plans.registry import (
+        PLAN_LOG,
+    )
     from aws_autonomous_driving_data_lake_image_extraction_pipeline_from_ros_bagfiles_spark.session import (
         get_spark,
     )
@@ -98,6 +108,7 @@ def main() -> int:
         print(f"FAIL  unknown query name(s): {sorted(unknown)}")
         return 1
     failures = 0
+    n_served = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -107,13 +118,23 @@ def main() -> int:
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
             s_n, s_cols, s_h = frame_digest(scols, srows)
+            served = ""
+            if PLAN_LOG[-1] == (name, "stored"):
+                again = fn(spark, SF_DIR)
+                if PLAN_LOG[-1] == (name, "served"):
+                    n_served += 1
+                    rows = [tuple(r) for r in again.collect()]
+                    same = frame_digest(again.columns, rows) == (s_n, s_cols, s_h)
+                    served = " served[=]" if same else " served[!]"
         except Exception:
             print(f"FAIL  {name}: spark error")
             traceback.print_exc()
             failures += 1
             continue
         if name not in oracles:
-            print(f"ROWS  {name}: {s_n} rows (no oracle) [{time.time()-t0:.1f}s]")
+            status = "FAIL" if served == " served[!]" else "ROWS"
+            failures += status == "FAIL"
+            print(f"{status}  {name}: {s_n} rows (no oracle){served} [{time.time()-t0:.1f}s]")
             continue
         try:
             cur = con.execute(oracles[name])
@@ -125,11 +146,11 @@ def main() -> int:
             traceback.print_exc()
             failures += 1
             continue
-        ok = (s_n, s_cols, s_h) == (d_n, d_cols, d_h)
+        ok = (s_n, s_cols, s_h) == (d_n, d_cols, d_h) and served != " served[!]"
         status = "PASS" if ok else "FAIL"
         if not ok:
             failures += 1
-        print(f"{status}  {name}: spark={s_n} duck={d_n} cols[{'=' if s_cols==d_cols else '!'}] hash[{'=' if s_h==d_h else '!'}] [{time.time()-t0:.1f}s]")
+        print(f"{status}  {name}: spark={s_n} duck={d_n} cols[{'=' if s_cols==d_cols else '!'}] hash[{'=' if s_h==d_h else '!'}]{served} [{time.time()-t0:.1f}s]")
         if not ok and s_cols != d_cols:
             print(f"      spark cols: {s_cols}\n      duck  cols: {d_cols}")
         if not ok and s_cols == d_cols and s_n == d_n:
@@ -140,6 +161,7 @@ def main() -> int:
                 if a != b:
                     print(f"      spark row: {a}\n      duck  row: {b}")
                     break
+    print(f"# plan cache: {n_served} queries served on their second build")
     spark.stop()
     return 1 if failures else 0
 
